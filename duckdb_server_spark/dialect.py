@@ -1198,6 +1198,11 @@ def _flatten_schemas(sql: str, schemas: set) -> str:
 
 
 
+# Analysis failing on a ``dd_*`` shim means the session skipped
+# ``session.bootstrap``'s function registration.
+_MISSING_SHIM_RE = re.compile(r"UNRESOLVED_ROUTINE\].*?`dd_\w+`")
+
+
 def run_sql(spark: SparkSession, sql: str) -> DataFrame:
     """Execute SQL, accepting both Spark and DuckDB dialect. Native Spark
     SQL takes the first path untouched (analysis is forced via ``.schema``
@@ -1307,12 +1312,16 @@ def run_sql(spark: SparkSession, sql: str) -> DataFrame:
             return df
         except DialectError:
             raise  # native fallback would run different semantics
-        except Exception:
-            pass  # fall through: maybe it was Spark-dialect input
+        except Exception as exc:
+            if _MISSING_SHIM_RE.search(str(exc)):
+                raise  # an unregistered dd_* shim is a bug, not Spark input
+            # fall through: maybe it was Spark-dialect input
     try:
         df = spark.sql(sql)
         df.schema  # force analysis
         return df
+    except DialectError:
+        raise  # e.g. a read-only gate denial: no other spelling may run
     except Exception as first_err:  # ParseException / AnalysisException
         if _RECURSIVE_RE.match(sql):
             # native recursive CTE failed (UNION-distinct form) → the

@@ -9,7 +9,8 @@ This engine:
     eng.sql("SELECT ...").show()       # embedded use (the -db analog)
     eng.serve(port=32010)              # Flight serving (the gRPC analog)
 
-Lifecycle parity (main.go:44-119): construct → register warehouse views
+Lifecycle parity (main.go:44-119), all in ``session.bootstrap``: construct →
+register the function surface (the ``LOAD`` analog) → warehouse views
 (`-db`) → run init SQL (`-init`) → capability + sql_info metadata views
 (duckdb_extensions()/GetSqlInfo analogs) → optionally serve.
 """
@@ -40,12 +41,6 @@ class Engine:
     ):
         self.spark = spark or get_spark(app_name=app_name)
         self.warehouse_dir = warehouse_dir
-        from duckdb_server_spark.dialect import register_dialect_functions
-        from duckdb_server_spark.functions.udfs import register_udfs
-
-        # Function surface first: init SQL may use dialect names.
-        register_udfs(self.spark)
-        register_dialect_functions(self.spark)
         self.views = bootstrap(self.spark, warehouse_dir, init_sql=init_sql)
         self._server = None
 

@@ -193,7 +193,9 @@ class _BitWriterLSB:
     def write(self, value: int, width: int) -> None:
         if value < 0 or (width < 32 and value >= (1 << width)):
             raise ValueError("Vorbis writer: value out of field range")
-        self._acc |= value << self._n
+        # mask: a >= 32-bit field skips the range check above, and must
+        # not spill into the fields after it
+        self._acc |= (value & ((1 << width) - 1)) << self._n
         self._n += width
 
     def render(self) -> bytes:

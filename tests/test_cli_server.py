@@ -1,0 +1,118 @@
+"""The CLI server (``python -m duckdb_server_spark.server``, the Docker
+entrypoint) builds its session through ``session.bootstrap`` like
+``Engine``: DuckDB-first rewrites find their ``dd_*`` shims, so answers
+over the wire carry DuckDB semantics instead of native Spark's."""
+
+from __future__ import annotations
+
+import os
+import queue
+import re
+import signal
+import subprocess
+import sys
+import threading
+import time
+
+import duckdb
+import pyarrow.flight as flight
+import pytest
+
+from duckdb_server_spark import flightsql
+from duckdb_server_spark import server as srv
+from duckdb_server_spark.dialect import rewrite
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BOOT_TIMEOUT_S = 300
+
+
+@pytest.fixture(scope="module")
+def warehouse(sf_dir):
+    """The sf0.01 corpus beside the test corpus (TESTDATA.md)."""
+    path = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.exists(os.path.join(path, "lineitem.parquet")):
+        pytest.skip(f"no warehouse at {path}")
+    return path
+
+
+@pytest.fixture(scope="module")
+def cli_port(tmp_path_factory, warehouse):
+    log = open(tmp_path_factory.mktemp("cli") / "server.log", "w")
+    proc = subprocess.Popen(
+        [sys.executable, "-m", "duckdb_server_spark.server",
+         "--warehouse", warehouse, "--port", "0"],
+        cwd=REPO, stdout=subprocess.PIPE, stderr=log, text=True,
+        start_new_session=True,
+    )
+    lines: queue.Queue = queue.Queue()  # stdout, read off-thread so boot can time out
+
+    def pump() -> None:
+        for line in proc.stdout:
+            lines.put(line)
+
+    threading.Thread(target=pump, daemon=True).start()
+    try:
+        deadline = time.monotonic() + BOOT_TIMEOUT_S
+        port = None
+        while port is None:
+            remaining = deadline - time.monotonic()
+            if remaining <= 0 or proc.poll() is not None:
+                pytest.fail(f"CLI server did not start; log in {log.name}")
+            try:
+                line = lines.get(timeout=min(remaining, 1.0))
+            except queue.Empty:
+                continue
+            if m := re.match(r"serving .* port=(\d+)", line):
+                port = int(m.group(1))
+        yield port
+    finally:
+        os.killpg(proc.pid, signal.SIGKILL)
+        proc.wait()
+        log.close()
+
+
+@pytest.mark.parametrize(
+    "sql, message",
+    [
+        ("SELECT ln(0.0) AS v", "cannot take logarithm of zero"),
+        ("SELECT sqrt(-1.0) AS v", "cannot take square root of a negative number"),
+    ],
+)
+def test_cli_server_raises_duckdb_libm_errors(cli_port, sql, message):
+    with pytest.raises(duckdb.Error, match=message):
+        duckdb.execute(sql)
+    # A DoGet execution error carries the whole JVM trace (~60 KB), past
+    # gRPC's default metadata cap, so read it with a larger cap.
+    client = flight.connect(
+        f"grpc://127.0.0.1:{cli_port}",
+        generic_options=[("grpc.max_metadata_size", 1 << 20)],
+    )
+    try:
+        info = client.get_flight_info(
+            flight.FlightDescriptor.for_command(
+                flightsql.encode_command_statement_query(sql)
+            )
+        )
+        with pytest.raises(flight.FlightServerError, match=message):
+            client.do_get(info.endpoints[0].ticket).read_all()
+    finally:
+        client.close()
+
+
+def test_cli_server_rounds_doubles_like_duckdb(cli_port, warehouse):
+    # Several of these products sit within an ulp of a .5 boundary at the
+    # 6th decimal, where Spark's HALF_UP disagrees with DuckDB's rounding.
+    sql = (
+        "SELECT l_orderkey, l_linenumber, "
+        "round(l_extendedprice * l_discount * 0.001, 6) AS v "
+        "FROM lineitem ORDER BY l_orderkey, l_linenumber"
+    )
+    assert "dd_libm_round" in rewrite(sql, duckdb_first=True)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW lineitem AS SELECT * FROM "
+        f"read_parquet('{warehouse}/lineitem.parquet')"
+    )
+    expected = con.execute(sql).fetchall()
+    got = srv.query_flightsql(cli_port, sql).to_pylist()
+    assert [tuple(r.values()) for r in got] == expected

@@ -215,17 +215,18 @@ def test_s3_secret_maps_to_hadoop_conf(sql_session):
 
 def test_flight_server_accepts_duckdb_dialect(sql_session):
     """End-to-end serving-path parity: raw DuckDB SQL through Flight."""
-    from duckdb_server_spark.server import resolve_query_sql
+    from duckdb_server_spark.server import resolve_query_frame
 
-    resolved = resolve_query_sql(
+    df = resolve_query_frame(
         sql_session, "SELECT * EXCLUDE (o_orderdate) FROM orders LIMIT 1"
     )
-    assert "EXCEPT" in resolved
+    assert "o_orderdate" not in df.columns and "o_orderkey" in df.columns
     # read-only gate still applies to dialect input
     import pyarrow.flight as flight
 
-    with pytest.raises(flight.FlightServerError):
-        resolve_query_sql(sql_session, "DROP TABLE orders")
+    with pytest.raises(flight.FlightServerError, match="read-only server"):
+        resolve_query_frame(sql_session, "DROP TABLE orders")
+    assert sql_session.catalog.tableExists("orders")
 
 
 def test_regexp_replace_flag_shim():

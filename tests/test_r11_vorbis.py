@@ -249,3 +249,16 @@ def test_fixture_bytes_pinned():
     )
     blob = encode_ogg_vorbis([pkt], books, floor, residue)
     assert hashlib.sha256(blob).hexdigest() == PINNED_FIXTURE_SHA256
+
+
+def test_bit_writer_masks_wide_field():
+    # fields of 32+ bits skip the range check; an oversized value must be
+    # cut to its width rather than spill into the next field
+    from duckdb_server_spark.operators.vorbis import _BitReaderLSB, _BitWriterLSB
+
+    bw = _BitWriterLSB()
+    bw.write(0xF_DEADBEEF, 32)  # 36 significant bits
+    bw.write(0b0101, 4)
+    br = _BitReaderLSB(bw.render())
+    assert br.read(32) == 0xDEADBEEF
+    assert br.read(4) == 0b0101

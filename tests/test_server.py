@@ -56,15 +56,6 @@ def test_warehouse_query_streams_batches(flight_port):
     assert set(table.column_names) == {"l_returnflag", "n"}
 
 
-def test_sql_info_legacy(flight_port):
-    """Round-1 metadata path (plain sentinel): (info_name, value) rows."""
-    table = srv.get_sql_info_legacy(flight_port)
-    assert table.column_names == ["info_name", "value"]
-    info = dict(zip(table.column(0).to_pylist(), table.column(1).to_pylist()))
-    assert info["server_name"] == "duckdb_server_spark"
-    assert info["server_read_only"] == "true"
-
-
 def test_sql_info_standard_dense_union(flight_port):
     """Standard Flight SQL GetSqlInfo (main.go:173-175, 202-223): protobuf
     Any(CommandGetSqlInfo) descriptor, dense-union value column."""
