@@ -20,10 +20,10 @@ Spark-first differences (improvements, documented in SURVEY.md §3):
   only** (``spark.sql(q).schema`` — parse → analyze, no job). The
   reference executes the full query just to read the schema and then
   discards the result (main.go:142-148), doubling every two-step query.
-- Results stream **incrementally**: each executor serializes its Arrow
-  batches to IPC and the driver forwards them one at a time
-  (``toLocalIterator`` — bounded driver memory), matching the reference's
-  pipelined DoGet loop (main.go:241-243). No full-result materialization.
+- Results transfer in **one Spark job** (``toArrow``: JVM-side Arrow, no
+  Python worker), forwarded as bounded zero-copy slices. Unlike the
+  reference's pipelined loop (main.go:241-243), the driver holds one whole
+  result per in-flight DoGet and sends the first batch once it is collected.
 
 Read-only serving, enforced at one chokepoint: while a request resolves
 (``read_only_scope``), every ``SparkSession.sql`` on that thread is gated
@@ -42,18 +42,25 @@ from __future__ import annotations
 import functools
 import re
 import threading
+from collections import OrderedDict
 from collections.abc import Iterator
 from contextlib import contextmanager
 
 import pyarrow as pa
 import pyarrow.flight as flight
+from pyspark.errors import PySparkException, PythonException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from duckdb_server_spark import dialect, flightsql
 
 # Rows per streamed RecordBatch (the reference streams whatever batch size
 # DuckDB produces; we re-chunk to a bounded size).
 BATCH_ROWS = 8192
+
+# Open prepared-statement handles per server; past it the oldest is
+# evicted, bounding a client that never sends ClosePreparedStatement.
+MAX_PREPARED_STATEMENTS = 1024
 
 # Read-only command prefixes allowed through the statement gate.
 _READONLY_COMMAND_PREFIXES = ("Explain", "Show", "Describe")
@@ -145,53 +152,44 @@ def resolve_query_frame(spark: SparkSession, sql: str) -> DataFrame:
     with dialect.serving_dialect(), read_only_scope():
         try:
             return dialect.run_sql(spark, sql)
-        except flight.FlightServerError:
-            raise
         except Exception as exc:
-            raise flight.FlightServerError(str(exc)) from exc
+            raise _flight_error(exc) from exc
+
+
+def _flight_error(exc: Exception) -> flight.FlightServerError:
+    """An engine error as a Flight error (main.go:230-232) with the root
+    cause's message only: a gRPC client with default options refuses error
+    metadata past 8 KB, which a Python worker's traceback can pass."""
+    if isinstance(exc, flight.FlightServerError):
+        return exc
+    message = str(exc)
+    if isinstance(exc, PythonException):
+        # The traceback's last line: "ValueError: cannot take logarithm …"
+        message = message.rstrip().rpartition("\n")[2]
+    elif isinstance(exc, PySparkException):
+        message = exc.getMessage() or message
+    return flight.FlightServerError(message)
 
 
 def _arrow_schema(df: DataFrame) -> pa.Schema:
-    """The result's Arrow schema; an engine error becomes a Flight error
-    (main.go:230-232)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
+    """The result's Arrow schema; an engine error becomes a Flight error."""
     try:
         return to_arrow_schema(df.schema)
     except Exception as exc:
-        raise flight.FlightServerError(str(exc)) from exc
+        raise _flight_error(exc) from exc
 
 
 def iter_arrow_batches(df: DataFrame, schema: pa.Schema) -> Iterator[pa.RecordBatch]:
-    """Stream a DataFrame's result as Arrow batches with bounded driver
-    memory (the reference's pipelined DoGet loop, main.go:241-243).
-
-    Each executor serializes its Arrow batches to IPC bytes inside
-    ``mapInArrow`` (no row-at-a-time Python); the driver pulls one
-    partition at a time via ``toLocalIterator(prefetchPartitions=True)``
-    and forwards the deserialized batches. Partition order — and therefore
-    any ORDER BY in the query — is preserved.
-    """
-
-    def _serialize(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for chunk_start in range(0, batch.num_rows, BATCH_ROWS):
-                chunk = batch.slice(chunk_start, BATCH_ROWS)
-                sink = pa.BufferOutputStream()
-                with pa.ipc.new_stream(sink, chunk.schema) as writer:
-                    writer.write_batch(chunk)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([sink.getvalue().to_pybytes()], pa.binary())],
-                    names=["ipc"],
-                )
-
-    blobs = df.mapInArrow(_serialize, "ipc binary")
-    for row in blobs.toLocalIterator(prefetchPartitions=True):
-        with pa.ipc.open_stream(row.ipc) as reader:
-            for batch in reader:
-                if batch.schema != schema:
-                    batch = pa.Table.from_batches([batch]).cast(schema).to_batches()[0]
-                yield batch
+    """The result as zero-copy slices of at most ``BATCH_ROWS`` rows, in
+    result order, from one JVM-side Arrow collect (one Spark job; no Python
+    worker unless the query calls a Python UDF)."""
+    try:
+        table = df.toArrow()
+    except Exception as exc:
+        raise _flight_error(exc) from exc
+    if table.schema != schema:
+        table = table.cast(schema)
+    yield from table.to_batches(max_chunksize=BATCH_ROWS)
 
 
 class SparkFlightServer(flight.FlightServerBase):
@@ -206,10 +204,11 @@ class SparkFlightServer(flight.FlightServerBase):
         # reference leaves DoAction Unimplemented (main.go:121-124); ADBC
         # FlightSQL drivers route *every* statement through
         # CreatePreparedStatement, so implementing the pair is what makes
-        # off-the-shelf clients work end-to-end.
-        self._prepared: dict[bytes, str] = {}
+        # off-the-shelf clients work end-to-end. Oldest first.
+        self._prepared: OrderedDict[bytes, str] = OrderedDict()
         # handle → one row of parameter values bound via DoPut (ADBC/JDBC
         # '?'/'$N' binding); consumed at execution time by bind_parameters.
+        # Keys are open handles only.
         self._bound: dict[bytes, list] = {}
         self._prepared_lock = threading.Lock()
         self._prepared_seq = 0
@@ -326,8 +325,6 @@ class SparkFlightServer(flight.FlightServerBase):
         ]
         schema = flightsql.GET_TABLES_SCHEMA
         if include_schema:
-            from pyspark.sql.pandas.types import to_arrow_schema
-
             arrays.append(
                 pa.array(
                     [
@@ -417,6 +414,9 @@ class SparkFlightServer(flight.FlightServerBase):
                 self._prepared_seq += 1
                 handle = b"dss-ps-%d" % self._prepared_seq
                 self._prepared[handle] = sql
+                while len(self._prepared) > MAX_PREPARED_STATEMENTS:
+                    evicted, _ = self._prepared.popitem(last=False)
+                    self._bound.pop(evicted, None)
             yield flight.Result(
                 flightsql.encode_action_create_prepared_result(
                     handle, flightsql.serialize_schema(schema)
@@ -449,11 +449,6 @@ class SparkFlightServer(flight.FlightServerBase):
                 "CommandPreparedStatementQuery parameter binding"
             )
         handle = flightsql.decode_prepared_statement_handle(unpacked[1])
-        with self._prepared_lock:
-            if handle not in self._prepared:
-                raise flight.FlightServerError(
-                    f"unknown prepared statement handle {handle!r}"
-                )
         table = reader.read_all()
         if table.num_rows != 1:
             raise flight.FlightServerError(
@@ -461,6 +456,10 @@ class SparkFlightServer(flight.FlightServerBase):
             )
         row = [col[0].as_py() for col in table.columns]
         with self._prepared_lock:
+            if handle not in self._prepared:
+                raise flight.FlightServerError(
+                    f"unknown prepared statement handle {handle!r}"
+                )
             self._bound[handle] = row
 
     def list_actions(self, context):

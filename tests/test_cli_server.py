@@ -116,3 +116,32 @@ def test_cli_server_rounds_doubles_like_duckdb(cli_port, warehouse):
     expected = con.execute(sql).fetchall()
     got = srv.query_flightsql(cli_port, sql).to_pylist()
     assert [tuple(r.values()) for r in got] == expected
+
+
+@pytest.mark.parametrize(
+    "sql, message",
+    [
+        ("SELECT ln(0.0) AS v", "cannot take logarithm of zero"),
+        (
+            "SELECT CAST(2147483647 AS INT) + CAST(l_linenumber AS INT) AS v "
+            "FROM lineitem",
+            r"\[ARITHMETIC_OVERFLOW\] integer overflow",
+        ),
+    ],
+)
+def test_cli_server_errors_reach_stock_client(cli_port, sql, message):
+    """A DoGet execution error carries the root cause's message only, so a
+    client with default gRPC options (8 KB metadata cap) reads it rather
+    than "received initial metadata size exceeds limit"."""
+    client = flight.connect(f"grpc://127.0.0.1:{cli_port}")
+    try:
+        info = client.get_flight_info(
+            flight.FlightDescriptor.for_command(
+                flightsql.encode_command_statement_query(sql)
+            )
+        )
+        with pytest.raises(flight.FlightServerError, match=message) as err:
+            client.do_get(info.endpoints[0].ticket).read_all()
+    finally:
+        client.close()
+    assert "Traceback" not in str(err.value)

@@ -113,9 +113,9 @@ def test_readonly_gate_allows_metadata(flight_port):
 
 def test_large_result_streams_incrementally(flight_port, monkeypatch):
     """Full-table result arrives as multiple bounded batches in order
-    (the reference's pipelined DoGet, main.go:241-243) — not one
-    driver-materialized table. Batch size shrunk so the test corpus spans
-    many batches."""
+    (the reference's DoGet batch loop, main.go:241-243), sliced from the
+    one-job Arrow collect. Batch size shrunk so the test corpus spans many
+    batches."""
     monkeypatch.setattr(srv, "BATCH_ROWS", 512)
     client = flight.connect(f"grpc://127.0.0.1:{flight_port}")
     try:
@@ -139,6 +139,113 @@ def test_large_result_streams_incrementally(flight_port, monkeypatch):
     assert n_batches > 1
     assert n_rows > srv.BATCH_ROWS
     assert ordered
+
+
+def _spark_job_ids(spark) -> set[int]:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def test_do_get_runs_one_spark_job(spark, flight_port, duck):
+    """A DoGet over a multi-partition scan is one Spark job, not one job
+    per partition, and keeps the result's partition order. An ORDER BY
+    adds the sort's own jobs (range sampling, shuffle), so the one-job
+    count is asserted on the scan; the ORDER BY result is checked for
+    order."""
+    cols = "l_orderkey, l_linenumber, l_partkey, l_quantity, l_returnflag"
+    scan = f"SELECT {cols} FROM lineitem WHERE l_orderkey < 100"
+    ordered = f"{scan} ORDER BY l_orderkey, l_linenumber"
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "16k")  # the test corpus file spans several splits
+    try:
+        assert spark.sql(scan).rdd.getNumPartitions() > 1
+        before = _spark_job_ids(spark)
+        table = srv.query_raw(flight_port, scan)
+        assert len(_spark_job_ids(spark) - before) == 1
+        got = [tuple(r.values()) for r in table.to_pylist()]
+        assert got == [tuple(r) for r in spark.sql(scan).collect()]
+        assert sorted(got) == sorted(duck.execute(scan).fetchall())
+        got = srv.query_raw(flight_port, ordered).to_pylist()
+        assert [tuple(r.values()) for r in got] == duck.execute(ordered).fetchall()
+    finally:
+        spark.conf.set(key, saved)
+
+
+@pytest.mark.parametrize(
+    "sql, types",
+    [
+        ("SELECT * FROM lineitem WHERE false", None),
+        (
+            "SELECT CAST(l_extendedprice AS DECIMAL(12, 2)) AS price, "
+            "CAST(l_shipdate AS DATE) AS ship_day, l_shipdate AS shipped_at, "
+            "CAST(l_returnflag AS VARCHAR) AS flag "
+            "FROM lineitem WHERE l_orderkey < 100",
+            [pa.decimal128(12, 2), pa.date32(), pa.timestamp("us", tz="UTC"),
+             pa.string()],
+        ),
+    ],
+)
+def test_do_get_schema_matches_flight_info(flight_port, sql, types):
+    """DoGet's stream and every batch carry exactly the GetFlightInfo
+    schema; an empty result is zero batches under the full schema."""
+    client = flight.connect(f"grpc://127.0.0.1:{flight_port}")
+    try:
+        info = client.get_flight_info(flight.FlightDescriptor.for_command(sql.encode()))
+        reader = client.do_get(info.endpoints[0].ticket)
+        batches = [chunk.data for chunk in reader]
+        stream_schema = reader.schema
+    finally:
+        client.close()
+    assert stream_schema.equals(info.schema)
+    assert all(batch.schema.equals(info.schema) for batch in batches)
+    if types is None:
+        assert batches == []
+        assert info.schema.names[:2] == ["l_orderkey", "l_partkey"]
+    else:
+        assert info.schema.types == types
+        assert sum(batch.num_rows for batch in batches) > 0
+
+
+def test_prepared_statements_capped(spark, flight_port, monkeypatch):
+    """Handles a client never closes are evicted oldest first, with their
+    bound parameters; the evicted handle is then unknown."""
+    cap = 16
+    monkeypatch.setattr(srv, "MAX_PREPARED_STATEMENTS", cap)
+    server, _thread = srv.serve_in_background(spark)
+    client = flight.connect(f"grpc://127.0.0.1:{server.port}")
+
+    def descriptor(handle):
+        return flight.FlightDescriptor.for_command(
+            flightsql.encode_command_prepared_statement_query(handle)
+        )
+
+    try:
+        handles = []
+        for i in range(cap + 10):
+            result = list(client.do_action(flight.Action(
+                flightsql.CREATE_PREPARED_STATEMENT,
+                flightsql.encode_action_create_prepared_request("SELECT ? AS v"),
+            )))
+            handles.append(flightsql.decode_action_create_prepared_result(
+                result[0].body.to_pybytes())[0])
+            batch = pa.record_batch([pa.array([i])], names=["p1"])
+            writer, _ = client.do_put(descriptor(handles[-1]), batch.schema)
+            writer.write_batch(batch)
+            writer.close()
+        assert len(server._prepared) == cap
+        assert len(server._bound) == cap
+        assert list(server._prepared) == handles[-cap:]
+        evicted = flightsql.encode_command_prepared_statement_query(handles[0])
+        with pytest.raises(flight.FlightServerError, match="unknown prepared"):
+            client.do_get(flight.Ticket(evicted)).read_all()
+        info = client.get_flight_info(descriptor(handles[-1]))
+        table = client.do_get(info.endpoints[0].ticket).read_all()
+        assert table["v"].to_pylist() == [cap + 9]
+    finally:
+        client.close()
+        server.shutdown()
 
 
 def test_engine_error_surfaces(flight_port):
