@@ -88,90 +88,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 from duckdb_server_spark.dialect_rewrites.core import (  # noqa: F401
     DialectError,
-    _DD_HASH_COMBINE_K,
-    _DD_HASH_MASK,
-    _DD_NULL_HASH,
-    _EXPR_HEAD_KEYWORDS,
-    _PLACEHOLDER,
-    _PLACEHOLDER_RE,
-    _dd_murmur64a,
-    _dd_murmur_fin,
-    _find_top_keyword,
     _literal_value,
     _mask,
-    _masked_literal,
     _matching_paren,
-    _primary_back,
-    _primary_end,
-    _primary_fwd,
-    _run_sql_late,
     _split_top_commas,
     _unmask,
 )
 from duckdb_server_spark.dialect_rewrites.exprs import (  # noqa: F401
-    _ASOF_HEAD_RE,
-    _CLAUSE_KEYWORDS,
-    _COLREF_RE,
-    _DATEDIFF_RE,
-    _DD_TIME_MICROS,
-    _DD_UNIT_CANON,
-    _DISTINCT_ON_RE,
-    _DYN_INTERVAL_RE,
-    _DYN_INTERVAL_UNITS,
-    _EXCLUDE_BARE_RE,
-    _EXCLUDE_FRAME_RE,
-    _EXCLUDE_PAREN_RE,
-    _FILTER_SHORT_RE,
-    _FILTER_WHERE_RE,
-    _FN_RENAMES,
-    _FN_RENAME_RE,
-    _GENSUB_RE,
-    _GLOB_RE,
-    _HEX_CAST_BARE_RE,
-    _HEX_CAST_RE,
-    _INTERVAL_DAYS,
-    _INTERVAL_MICROS,
-    _INTERVAL_MONTHS,
-    _LATERAL_UNNEST_RE,
-    _LATERAL_VALUES_RE,
-    _LEN_ARRAY_HEADS,
-    _LEN_ARRAY_NAMES,
-    _LEN_RE,
-    _LEN_STRING_HEADS,
-    _LIST_AGG_MAP,
-    _LIST_AGG_RE,
-    _MAP_EXTRACT_RE,
-    _MAP_FN_RE,
-    _MEDIAN_RE,
-    _ORDERED_AGG_RE,
-    _RANGE_TF_ALIAS_RE,
-    _REGEXP_EXTRACT_ALL_RE,
-    _REGEXP_REPLACE_RE,
-    _SLICE_RE,
-    _SRC_END_KEYWORDS,
-    _STAR_REPLACE_RE,
-    _STRFTIME_RE,
-    _STRFTIME_TOKENS,
-    _STRFTIME_TOKENS3,
-    _STRFTIME_WEEK_EXPRS,
-    _STRFTIME_WEEK_RE,
-    _STRING_SPLIT_RE,
-    _STRUCT_PACK_RE,
-    _TB_EPOCH_ORIGIN,
-    _TIME_BUCKET_RE,
-    _TO_INTERVAL_UNIT,
-    _TO_YM_SCALE,
-    _TRIM_SWAP_RE,
-    _WIN_DISTINCT_RE,
-    _XOR_RE,
     _column_kinds,
-    _date_diff_boundary,
     _depth_at,
-    _expr_start,
-    _find_top_kw_sq,
-    _order_comparator,
-    _parse_order_keys,
-    _range_expr,
     _rewrite_asof,
     _rewrite_datediff_units,
     _rewrite_distinct_on,
@@ -212,78 +137,9 @@ from duckdb_server_spark.dialect_rewrites.exprs import (  # noqa: F401
     _rewrite_window_filter,
     _rewrite_windowed_distinct,
     _rewrite_xor,
-    _scrub_bare_star,
-    _series_expr,
-    _slice_window,
-    _step_slice_expr,
-    _strftime_concat,
-    _strftime_to_java,
-    _tb_temporal_kind,
-    _top_level_as,
-    _window_spec_parts,
 )
 from duckdb_server_spark.dialect_rewrites.breadth import (  # noqa: F401
-    _ANY_ALL_RE,
-    _AT_TZ_RE,
-    _CMP_OP_RE,
-    _COLLATE_RE,
-    _CONCAT_FN_RE,
-    _DATE_LIT_RE,
-    _DATE_MINUS_RE,
-    _DATE_OPERAND,
-    _DATE_PLUS_IVAL_RE,
-    _DATE_PLUS_TIME_RE,
-    _DAY_MICROS,
-    _DOW_FIELDS,
-    _DUCK_DDL_TYPES,
-    _EXTRACT_EPOCH_RE,
-    _FETCH_RE,
-    _FMT_HOLE_RE,
-    _FROM_FIRST_PAREN_RE,
-    _HASH_CALL_RE,
-    _HASH_INT_WIDTH,
-    _IDX_LAMBDA_FNS_RE,
-    _IGNORE_NULLS_IN_ARGS_RE,
-    _INTERVAL_FIRST_RE,
-    _INTERVAL_UNIT_MICROS,
-    _IV_UNIT,
-    _JSON_ARROW_RE,
-    _MATERIALIZED_CTE_RE,
-    _OFFSET_LIMIT_RE,
-    _OFFSET_ROWS_RE,
-    _PERCENT_LIMIT_RE,
-    _POSITIONAL_RE,
-    _POSTFIX_FACT_RE,
-    _POWER_OP_RE,
-    _REGEXP_SPLIT_TT_RE,
-    _SIMILAR_TO_RE,
-    _STRUCT_KEY_RE,
-    _TEMPLATE_RE,
-    _TILDE_REGEX_RE,
-    _TIME_ARITH_RE,
-    _TIME_LIT_INNER_RE,
-    _TIME_PLUS_DATE_RE,
-    _TS_TO_TIME_CAST_RE,
-    _TS_UNITS,
-    _TYPED_LITERAL_CAST,
-    _TYPED_LITERAL_RE,
-    _UNDERSCORE_NUM_RE,
-    _UNPIVOT_CLAUSE_RE,
-    _USING_SAMPLE_RE,
-    _WINDOW_CLAUSE_RE,
-    _arg_list_items,
-    _collate_key,
-    _collate_keys,
-    _duck_json_spec_to_ddl,
-    _flatten_named_struct,
-    _fmt_time_micros,
-    _fmt_to_printf,
     _fold_time_arithmetic,
-    _hash_operand,
-    _is_date_operand,
-    _matching_brace,
-    _parse_interval_micros,
-    _parse_time_micros,
     _rewrite_any_all,
     _rewrite_at_time_zone,
     _rewrite_collate,
@@ -319,26 +175,8 @@ from duckdb_server_spark.dialect_rewrites.breadth import (  # noqa: F401
     _rewrite_unpivot_aliases,
     _rewrite_using_sample,
     _rewrite_window_chain,
-    _template,
-    _time_epoch_seconds,
 )
 from duckdb_server_spark.dialect_rewrites.macros import (  # noqa: F401
-    _AT_ABS_RE,
-    _AT_ARITH_OP_RE,
-    _DEG_CONST,
-    _DEG_RAD_RE,
-    _DIALECT_FUNCTIONS,
-    _DOT_CALL_RE,
-    _DOT_CALL_SCHEMAS,
-    _LIBM_FNS,
-    _LIBM_RE,
-    _RAD_CONST,
-    _ROUND_RE,
-    _register_distance_shims,
-    _register_hash_shims,
-    _register_json_shims,
-    _register_libm_shims,
-    _register_text_shims,
     _rewrite_at_abs,
     _rewrite_division,
     _rewrite_dot_calls,
@@ -348,20 +186,6 @@ from duckdb_server_spark.dialect_rewrites.macros import (  # noqa: F401
     register_dialect_functions,
 )
 from duckdb_server_spark.dialect_rewrites.nested import (  # noqa: F401
-    _CMP_CONST_WORDS,
-    _CMP_LEFT_BOOL,
-    _CMP_RIGHT_BOOL,
-    _IVL_CAST_RE,
-    _IVL_UNIT,
-    _LIST_SET_OP_RE,
-    _NESTED_CMP_RE,
-    _boolctx_ranges,
-    _cmp_bool_context,
-    _cmp_is_constant,
-    _duck_interval_str,
-    _list_cmp_sql,
-    _named_struct_fields,
-    _nested_shape,
     _rewrite_interval_chain_arith,
     _rewrite_interval_epoch,
     _rewrite_interval_fields,
@@ -372,103 +196,27 @@ from duckdb_server_spark.dialect_rewrites.nested import (  # noqa: F401
     _rewrite_string_array_casts,
     _rewrite_in_subquery_3vl,
     _rewrite_nested_comparisons,
-    _struct_cmp_sql,
-    _tok_after,
-    _tok_before,
 )
 from duckdb_server_spark.dialect_rewrites.statements import (  # noqa: F401
-    DialectState,
-    Macro,
-    _ALTER_RE,
-    _ALTER_TYPE_MAP,
-    _ATTACH_RE,
-    _BARE_PATH_RE,
-    _BEGIN_RE,
-    _CHECKPOINT_RE,
-    _COMMENT_RE,
-    _COMMIT_RE,
-    _COPY_FROM_RE,
-    _COPY_RE,
-    _CREATE_INDEX_RE,
-    _CREATE_SCHEMA_RE,
-    _CREATE_SEQ_RE,
-    _CREATE_TYPE_RE,
-    _DEALLOCATE_RE,
-    _DELETE_RE,
-    _DETACH_RE,
-    _DOLLAR_PARAM_RE,
-    _DROP_INDEX_RE,
-    _DROP_MACRO_RE,
-    _DROP_RELATION_RE,
-    _DROP_SCHEMA_RE,
-    _DROP_SEQ_RE,
-    _DROP_TYPE_RE,
-    _DUCK_TYPE_NAMES,
     _EXECUTE_RE,
-    _EXPORT_DB_RE,
     _FILE_READ_HINT_RE,
-    _FILE_SUFFIX_FMT,
-    _IMPORT_DB_RE,
-    _INSERT_RE,
-    _INSTALL_RE,
-    _LOAD_RE,
-    _MACRO_RE,
     _PIVOT_CACHE_CAP,
     _PIVOT_RE,
-    _PRAGMA_RE,
-    _PREPARE_RE,
-    _READ_FNS,
-    _READ_FN_RE,
-    _ROLLBACK_RE,
-    _SECRET_RE,
     _SEQVAL_HINT_RE,
-    _SERVING_TL,
-    _SET_RE,
-    _STATES,
-    _STATE_KEY,
-    _TABLE_AS_RE,
-    _TABLE_DDL_RE,
     _TEMP_VIEW_CAP,
-    _TRUNCATE_RE,
-    _UPDATE_RE,
-    _USE_RE,
-    _VACUUM_RE,
-    _VIEW_RE,
-    _alter_spark_type,
-    _apply_secret,
     _catalog_tables,
     _count_frame,
     _duck_type_name,
     _duckdb_first,
     _expand_macros,
-    _file_read_view,
     _materialize,
-    _parse_literal_token,
-    _parse_read_args,
-    _path_format,
-    _register_macro,
     _resolve_file_reads,
-    _run_alter,
-    _run_copy,
-    _run_copy_from,
-    _run_delete,
     _run_execute,
-    _run_export_db,
-    _run_import_db,
-    _run_insert,
     _run_pivot,
-    _run_pragma,
-    _run_update,
-    _sniff_csv,
-    _strip_quotes,
     _track_temp_view,
-    _truthy,
-    _txn_record,
-    bind_named_parameters,
     bind_parameters,
     dialect_state,
     execute_statement,
-    render_sql_literal,
     run_script,
     serving_dialect,
     show_tables_frame,
@@ -477,16 +225,12 @@ from duckdb_server_spark.dialect_rewrites.statements import (  # noqa: F401
 )
 from duckdb_server_spark.dialect_rewrites.prepare import (  # noqa: F401
     _COLUMNS_FN_RE,
-    _EMBEDDED_PIVOT_RE,
     _RECURSIVE_RE,
     _UNION_BY_NAME_RE,
-    _columns_match,
     _expand_columns_fn,
-    _leading_cte_prefix,
     _resolve_embedded_pivots,
     _resolve_union_by_name,
     _run_recursive_cte,
-    _sql_like_to_regex,
     has_parameters,
     neutralize_parameters,
 )

@@ -1,3 +1,3 @@
 """Rewrite-family modules split out of dialect.py (round 11).
-Import via duckdb_server_spark.dialect, which re-exports every
-name for back-compat."""
+duckdb_server_spark.dialect re-exports the names its callers read;
+import anything else from the family module that defines it."""

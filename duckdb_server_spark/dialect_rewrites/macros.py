@@ -1093,6 +1093,64 @@ def _rewrite_at_abs(s: str) -> str:
 
 
 
+_MUL_OP_BEFORE_RE = re.compile(r"(?:[*%]|(?<![\w.\x00])DIV)\s*$", re.IGNORECASE)
+
+
+def _dividend_back(s: str, end: int) -> int | None:
+    """Start of the one primary ending at ``end`` (exclusive) on the left
+    of a ``/`` — a windowed aggregate ``agg(x) OVER (…)`` is one primary:
+    on consuming the OVER keyword, keep walking through the space to the
+    aggregate call — or None for an operand the rewrite leaves alone
+    (nothing, CASE…END, a named window)."""
+    j = end - 1
+    while j >= 0:
+        if s[j] in " \t\n:":
+            # a gap inside a primary only when it precedes the frame
+            # of an OVER clause ("agg(x) OVER (…)" is one operand) or
+            # a postfix '::' cast (the cast's operand is the primary)
+            k = j
+            while k >= 0 and s[k] in " \t\n":
+                k -= 1
+            wm = re.search(r"([A-Za-z_]\w*)$", s[: k + 1])
+            if wm and wm.group(1).upper() == "OVER":
+                j = k
+            elif k >= 1 and s[k] == ":" and s[k - 1] == ":" and j + 1 < end:
+                j = k - 2
+                while j >= 0 and s[j] in " \t\n":
+                    j -= 1
+            else:
+                break
+        elif s[j] in ")]":
+            depth, openc = 1, "(" if s[j] == ")" else "["
+            closec = s[j]
+            j -= 1
+            while j >= 0 and depth:
+                if s[j] == closec:
+                    depth += 1
+                elif s[j] == openc:
+                    depth -= 1
+                j -= 1
+        elif s[j].isalnum() or s[j] in "_.\x00":
+            w_end = j + 1
+            while j >= 0 and (s[j].isalnum() or s[j] in "_.\x00"):
+                j -= 1
+            if s[j + 1 : w_end].upper() == "OVER":
+                while j >= 0 and s[j] in " \t\n":
+                    j -= 1
+        else:
+            break
+    start = j + 1
+    operand = s[start:end].strip().upper()
+    prev_word = re.search(r"([A-Za-z_]\w*)\s*$", s[:start])
+    if (
+        not operand
+        or operand in ("END", "OVER")
+        or (prev_word and prev_word.group(1).upper() == "OVER")
+    ):
+        return None
+    return start
+
+
 def _rewrite_division(s: str, ieee: bool = False) -> str:
     """DuckDB's ``/`` ALWAYS returns DOUBLE (``SELECT typeof(10/4)`` →
     DOUBLE; decimal operands included) and division by zero yields NULL
@@ -1119,59 +1177,25 @@ def _rewrite_division(s: str, ieee: bool = False) -> str:
         if (i > 0 and s[i - 1] == "/") or (i + 1 < len(s) and s[i + 1] == "/"):
             i += 1  # '//' integer division — not this operator
             continue
-        # walk back over one primary operand (a windowed aggregate
-        # ``agg(x) OVER (…)`` is one primary: on consuming the OVER
-        # keyword, keep walking through the space to the aggregate call)
         j = i - 1
         while j >= 0 and s[j] in " \t\n":
             j -= 1
         end = j + 1
-        while j >= 0:
-            if s[j] in " \t\n:":
-                # a gap inside a primary only when it precedes the frame
-                # of an OVER clause ("agg(x) OVER (…)" is one operand) or
-                # a postfix '::' cast (the cast's operand is the primary)
-                k = j
-                while k >= 0 and s[k] in " \t\n":
-                    k -= 1
-                wm = re.search(r"([A-Za-z_]\w*)$", s[: k + 1])
-                if wm and wm.group(1).upper() == "OVER":
-                    j = k
-                elif k >= 1 and s[k] == ":" and s[k - 1] == ":" and j + 1 < end:
-                    j = k - 2
-                    while j >= 0 and s[j] in " \t\n":
-                        j -= 1
-                else:
-                    break
-            elif s[j] in ")]":
-                depth, openc = 1, "(" if s[j] == ")" else "["
-                closec = s[j]
-                j -= 1
-                while j >= 0 and depth:
-                    if s[j] == closec:
-                        depth += 1
-                    elif s[j] == openc:
-                        depth -= 1
-                    j -= 1
-            elif s[j].isalnum() or s[j] in "_.\x00":
-                w_end = j + 1
-                while j >= 0 and (s[j].isalnum() or s[j] in "_.\x00"):
-                    j -= 1
-                if s[j + 1 : w_end].upper() == "OVER":
-                    while j >= 0 and s[j] in " \t\n":
-                        j -= 1
-            else:
-                break
-        start = j + 1
-        operand = s[start:end]
-        prev_word = re.search(r"([A-Za-z_]\w*)\s*$", s[:start])
-        if (
-            not operand.strip()
-            or operand.strip().upper() in ("END", "OVER")
-            or (prev_word and prev_word.group(1).upper() == "OVER")
-        ):
+        start = _dividend_back(s, end)
+        if start is None:
             i += 1  # CASE…END / named-window operands: leave untouched
             continue
+        # '*', '%' and DIV (a lowered '//') share '/'s precedence and
+        # associate left to right: the dividend of a * b / c is a * b
+        while m := _MUL_OP_BEFORE_RE.search(s, 0, start):
+            j = m.start() - 1
+            while j >= 0 and s[j] in " \t\n":
+                j -= 1
+            prev = _dividend_back(s, j + 1)
+            if prev is None:
+                break
+            start = prev
+        operand = s[start:end]
         r_end = _primary_end(s, i + 1)
         right = s[i + 1 : r_end].strip()
         if not right:

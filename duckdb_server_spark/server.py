@@ -15,6 +15,13 @@ Protocol surface (both served):
   ``Any(TicketStatementQuery)``. Wire codecs: ``flightsql.py``.
 - **Raw tickets** (reference client/main.py:9-11): ticket bytes ARE the SQL.
 
+One command path, like the reference's switch on the command type:
+``SparkFlightServer._command`` decodes every descriptor or ticket once,
+into the SQL to resolve or the finished metadata table (catalogs, schemas,
+tables, keys, type and SqlInfo), and GetFlightInfo, GetSchema and DoGet
+branch once on which it is. Prepared statements live in one bounded map,
+handle → [SQL, bound parameter row].
+
 Spark-first differences (improvements, documented in SURVEY.md §3):
 - ``GetFlightInfo`` resolves the result schema via Catalyst **analysis
   only** (``spark.sql(q).schema`` — parse → analyze, no job). The
@@ -40,6 +47,7 @@ main.go).
 from __future__ import annotations
 
 import functools
+import itertools
 import re
 import threading
 from collections import OrderedDict
@@ -171,6 +179,16 @@ def _flight_error(exc: Exception) -> flight.FlightServerError:
     return flight.FlightServerError(message)
 
 
+def _action_body(action: flight.Action, type_url: str) -> bytes:
+    """The value of a DoAction body that must be ``Any(type_url)``."""
+    unpacked = flightsql.unpack_any(action.body.to_pybytes())
+    if unpacked is None or unpacked[0] != type_url:
+        raise flight.FlightServerError(
+            f"{action.type} body is not Any({type_url.rpartition('.')[2]})"
+        )
+    return unpacked[1]
+
+
 def _arrow_schema(df: DataFrame) -> pa.Schema:
     """The result's Arrow schema; an engine error becomes a Flight error."""
     try:
@@ -200,109 +218,87 @@ class SparkFlightServer(flight.FlightServerBase):
         super().__init__(location)
         self.spark = spark
         self._location = location
-        # Prepared-statement registry: opaque handle → SQL text. The
-        # reference leaves DoAction Unimplemented (main.go:121-124); ADBC
-        # FlightSQL drivers route *every* statement through
-        # CreatePreparedStatement, so implementing the pair is what makes
-        # off-the-shelf clients work end-to-end. Oldest first.
-        self._prepared: OrderedDict[bytes, str] = OrderedDict()
-        # handle → one row of parameter values bound via DoPut (ADBC/JDBC
-        # '?'/'$N' binding); consumed at execution time by bind_parameters.
-        # Keys are open handles only.
-        self._bound: dict[bytes, list] = {}
+        # Prepared statements, oldest first: handle → [SQL text, the
+        # parameter row bound via DoPut or None]. The reference leaves
+        # DoAction Unimplemented (main.go:121-124); ADBC FlightSQL drivers
+        # route *every* statement through CreatePreparedStatement, so
+        # implementing the pair is what makes off-the-shelf clients work.
+        self._prepared: OrderedDict[bytes, list] = OrderedDict()
         self._prepared_lock = threading.Lock()
-        self._prepared_seq = 0
+        self._handles = itertools.count(1)
 
-    # -- statement resolution ----------------------------------------------
-    def _resolve_command(self, raw: bytes):
-        """Classify descriptor/ticket bytes → (kind, payload).
-        kind ∈ {'sql_info', 'catalogs', 'db_schemas', 'tables', 'query', …};
-        payload is the SQL string for 'query', the requested info codes for
-        'sql_info', the decoded filter tuple for 'tables', else None."""
-        unpacked = flightsql.unpack_any(raw)
-        if unpacked is not None:
-            type_url, value = unpacked
-            if type_url == flightsql.CMD_GET_SQL_INFO:
-                return "sql_info", flightsql.decode_command_get_sql_info(value)
-            if type_url == flightsql.CMD_STATEMENT_QUERY:
-                return "query", flightsql.decode_command_statement_query(value)
-            if type_url == flightsql.TICKET_STATEMENT_QUERY:
-                handle = flightsql.decode_ticket_statement_query(value)
-                try:
-                    return "query", handle.decode("utf-8")
-                except UnicodeDecodeError:
-                    raise flight.FlightServerError(
-                        "statement handle is not UTF-8 SQL"
-                    ) from None
-            if type_url == flightsql.CMD_GET_CATALOGS:
-                return "catalogs", None
-            if type_url == flightsql.CMD_GET_DB_SCHEMAS:
-                return "db_schemas", None
-            if type_url == flightsql.CMD_GET_TABLES:
-                return "tables", flightsql.decode_command_get_tables(value)
-            if type_url == flightsql.CMD_GET_PRIMARY_KEYS:
-                return "primary_keys", None
-            if type_url in (
-                flightsql.CMD_GET_EXPORTED_KEYS,
-                flightsql.CMD_GET_IMPORTED_KEYS,
-            ):
-                return "keys", None
-            if type_url == flightsql.CMD_GET_XDBC_TYPE_INFO:
-                return "type_info", flightsql.decode_command_get_xdbc_type_info(value)
-            if type_url == flightsql.CMD_PREPARED_STATEMENT_QUERY:
-                handle = flightsql.decode_prepared_statement_handle(value)
-                with self._prepared_lock:
-                    sql = self._prepared.get(handle)
-                    params = self._bound.get(handle)
-                if sql is None:
-                    raise flight.FlightServerError(
-                        f"unknown prepared statement handle {handle!r}"
-                    )
-                if params is not None:
-                    try:
-                        sql = dialect.bind_parameters(sql, params)
-                    except ValueError as exc:
-                        raise flight.FlightServerError(str(exc)) from exc
-                return "query", sql
-            raise flight.FlightServerError(f"unsupported Flight SQL command {type_url}")
-        try:
-            return "query", raw.decode("utf-8")
-        except UnicodeDecodeError:
-            raise flight.FlightServerError(
-                "ticket is neither Flight SQL protobuf nor UTF-8 SQL"
-            ) from None
-
-    # -- FlightSQL metadata result tables -----------------------------------
+    # -- the one command decode (main.go:126-194's switch) ------------------
     _CATALOG_NAME = "spark_catalog"
     _DB_SCHEMA_NAME = "default"
 
-    def _metadata_table(self, kind: str, payload) -> pa.Table:
-        if kind == "sql_info":
-            return flightsql.sql_info_table(payload)
-        if kind == "catalogs":
+    def _command(self, raw: bytes) -> str | pa.Table:
+        """Decode descriptor/ticket bytes into the SQL to resolve, or into
+        the finished Flight SQL metadata table (cheap to build)."""
+        unpacked = flightsql.unpack_any(raw)
+        if unpacked is None:
+            try:
+                return raw.decode("utf-8")
+            except UnicodeDecodeError:
+                raise flight.FlightServerError(
+                    "ticket is neither Flight SQL protobuf nor UTF-8 SQL"
+                ) from None
+        type_url, value = unpacked
+        if type_url == flightsql.CMD_STATEMENT_QUERY:
+            return flightsql.decode_command_statement_query(value)
+        if type_url == flightsql.TICKET_STATEMENT_QUERY:
+            try:
+                return flightsql.decode_ticket_statement_query(value).decode("utf-8")
+            except UnicodeDecodeError:
+                raise flight.FlightServerError(
+                    "statement handle is not UTF-8 SQL"
+                ) from None
+        if type_url == flightsql.CMD_PREPARED_STATEMENT_QUERY:
+            handle = flightsql.decode_prepared_statement_handle(value)
+            with self._prepared_lock:
+                statement = self._prepared.get(handle)
+                if statement is None:
+                    raise flight.FlightServerError(
+                        f"unknown prepared statement handle {handle!r}"
+                    )
+                sql, params = statement
+            if params is None:
+                return sql
+            try:
+                return dialect.bind_parameters(sql, params)
+            except ValueError as exc:
+                raise flight.FlightServerError(str(exc)) from exc
+        if type_url == flightsql.CMD_GET_SQL_INFO:
+            return flightsql.sql_info_table(flightsql.decode_command_get_sql_info(value))
+        if type_url == flightsql.CMD_GET_CATALOGS:
             return pa.Table.from_arrays(
                 [pa.array([self._CATALOG_NAME])], schema=flightsql.GET_CATALOGS_SCHEMA
             )
-        if kind == "db_schemas":
+        if type_url == flightsql.CMD_GET_DB_SCHEMAS:
             return pa.Table.from_arrays(
                 [pa.array([self._CATALOG_NAME]), pa.array([self._DB_SCHEMA_NAME])],
                 schema=flightsql.GET_DB_SCHEMAS_SCHEMA,
             )
+        if type_url == flightsql.CMD_GET_TABLES:
+            return self._tables(*flightsql.decode_command_get_tables(value))
         # Constraint metadata: parquet views carry no PK/FK — the
         # protocol-correct answer is an empty standard-schema table, so
         # ADBC metadata fetches succeed instead of erroring on
         # Unimplemented (which is what the reference returns).
-        if kind == "primary_keys":
+        if type_url == flightsql.CMD_GET_PRIMARY_KEYS:
             return flightsql.empty_table(flightsql.GET_PRIMARY_KEYS_SCHEMA)
-        if kind == "keys":
+        if type_url in (flightsql.CMD_GET_EXPORTED_KEYS, flightsql.CMD_GET_IMPORTED_KEYS):
             return flightsql.empty_table(flightsql.GET_KEYS_SCHEMA)
-        if kind == "type_info":
-            return flightsql.xdbc_type_info_table(payload)
-        # tables: the served temp-view namespace (the '-db' warehouse).
-        # The Flight SQL table_name_filter_pattern is a SQL LIKE pattern
-        # ('%' any run, '_' one char) — translate to an anchored regex so
-        # '_' works and regex/glob metacharacters in names stay literal.
-        pattern, include_schema = payload
+        if type_url == flightsql.CMD_GET_XDBC_TYPE_INFO:
+            return flightsql.xdbc_type_info_table(
+                flightsql.decode_command_get_xdbc_type_info(value)
+            )
+        raise flight.FlightServerError(f"unsupported Flight SQL command {type_url}")
+
+    def _tables(self, pattern: str | None, include_schema: bool) -> pa.Table:
+        """CommandGetTables over the served temp-view namespace (the '-db'
+        warehouse). The table_name_filter_pattern is a SQL LIKE pattern
+        ('%' any run, '_' one char) — translated to an anchored regex so
+        '_' works and regex/glob metacharacters in names stay literal."""
         like_re = None
         if pattern is not None:
             like_re = re.compile(
@@ -339,24 +335,27 @@ class SparkFlightServer(flight.FlightServerBase):
             schema = flightsql.GET_TABLES_SCHEMA_WITH_SCHEMA
         return pa.Table.from_arrays(arrays, schema=schema)
 
+    def _schema(self, command: str | pa.Table) -> pa.Schema:
+        """The result schema: a metadata table's own, or the statement's
+        through gated Catalyst analysis only (vs the reference's full
+        double execution, main.go:144-148); routed statement forms may run
+        their inherent discovery job (dynamic PIVOT's distinct)."""
+        if isinstance(command, pa.Table):
+            return command.schema
+        return _arrow_schema(resolve_query_frame(self.spark, command))
+
     # -- entry point 2: schema probe (main.go:126-194) ----------------------
     def get_flight_info(self, context, descriptor):
-        kind, payload = self._resolve_command(descriptor.command)
-        if kind != "query":
-            # Metadata commands: cheap to build; schema from the result.
-            schema = self._metadata_table(kind, payload).schema
+        command = self._command(descriptor.command)
+        schema = self._schema(command)
+        if isinstance(command, pa.Table):
             ticket = flight.Ticket(descriptor.command)
         else:
-            # Gated resolution: catalyst analysis only for plain queries
-            # (vs the reference's full double execution, main.go:144-148);
-            # routed statement forms may run their inherent discovery job
-            # (dynamic PIVOT's distinct).
-            schema = _arrow_schema(resolve_query_frame(self.spark, payload))
-            # The ticket carries the original statement; DoGet re-resolves
+            # The ticket carries the statement; DoGet re-resolves
             # deterministically (file-read views and pivots are cached by
             # digest).
             ticket = flight.Ticket(
-                flightsql.encode_ticket_statement_query(payload.encode("utf-8"))
+                flightsql.encode_ticket_statement_query(command.encode("utf-8"))
             )
         endpoint = flight.FlightEndpoint(ticket, [self._location])
         # Unknown cardinality: -1 records / -1 bytes, like the reference
@@ -365,17 +364,14 @@ class SparkFlightServer(flight.FlightServerBase):
 
     # -- GetSchema: schema-only probe (no ticket, no execution) -------------
     def get_schema(self, context, descriptor):
-        kind, payload = self._resolve_command(descriptor.command)
-        if kind != "query":
-            return flight.SchemaResult(self._metadata_table(kind, payload).schema)
-        return flight.SchemaResult(_arrow_schema(resolve_query_frame(self.spark, payload)))
+        return flight.SchemaResult(self._schema(self._command(descriptor.command)))
 
     # -- entry point 1: execute + stream (main.go:196-250) ------------------
     def do_get(self, context, ticket):
-        kind, payload = self._resolve_command(ticket.ticket)
-        if kind != "query":
-            return flight.RecordBatchStream(self._metadata_table(kind, payload))
-        df = resolve_query_frame(self.spark, payload)
+        command = self._command(ticket.ticket)
+        if isinstance(command, pa.Table):
+            return flight.RecordBatchStream(command)
+        df = resolve_query_frame(self.spark, command)
         schema = _arrow_schema(df)
         return flight.GeneratorStream(schema, iter_arrow_batches(df, schema))
 
@@ -387,13 +383,9 @@ class SparkFlightServer(flight.FlightServerBase):
     # with off-the-shelf clients". Other actions stay Unimplemented. --------
     def do_action(self, context, action):
         if action.type == flightsql.CREATE_PREPARED_STATEMENT:
-            unpacked = flightsql.unpack_any(action.body.to_pybytes())
-            if unpacked is None or unpacked[0] != flightsql.ACTION_CREATE_PREPARED_REQ:
-                raise flight.FlightServerError(
-                    "CreatePreparedStatement body is not "
-                    "Any(ActionCreatePreparedStatementRequest)"
-                )
-            sql = flightsql.decode_action_create_prepared_request(unpacked[1])
+            sql = flightsql.decode_action_create_prepared_request(
+                _action_body(action, flightsql.ACTION_CREATE_PREPARED_REQ)
+            )
             if dialect.has_parameters(sql):
                 # Parameterized statement: full analysis must wait for the
                 # DoPut binding, so gate the statement shape only — on the
@@ -409,14 +401,12 @@ class SparkFlightServer(flight.FlightServerBase):
                 # schema rides back in the result so clients can bind
                 # without a round trip. Full dialect surface — DESCRIBE /
                 # SUMMARIZE / read_parquet prepare fine.
-                schema = _arrow_schema(resolve_query_frame(self.spark, sql))
+                schema = self._schema(sql)
             with self._prepared_lock:
-                self._prepared_seq += 1
-                handle = b"dss-ps-%d" % self._prepared_seq
-                self._prepared[handle] = sql
+                handle = b"dss-ps-%d" % next(self._handles)
+                self._prepared[handle] = [sql, None]
                 while len(self._prepared) > MAX_PREPARED_STATEMENTS:
-                    evicted, _ = self._prepared.popitem(last=False)
-                    self._bound.pop(evicted, None)
+                    self._prepared.popitem(last=False)
             yield flight.Result(
                 flightsql.encode_action_create_prepared_result(
                     handle, flightsql.serialize_schema(schema)
@@ -424,16 +414,11 @@ class SparkFlightServer(flight.FlightServerBase):
             )
             return
         if action.type == flightsql.CLOSE_PREPARED_STATEMENT:
-            unpacked = flightsql.unpack_any(action.body.to_pybytes())
-            if unpacked is None or unpacked[0] != flightsql.ACTION_CLOSE_PREPARED_REQ:
-                raise flight.FlightServerError(
-                    "ClosePreparedStatement body is not "
-                    "Any(ActionClosePreparedStatementRequest)"
-                )
-            handle = flightsql.decode_prepared_statement_handle(unpacked[1])
+            handle = flightsql.decode_prepared_statement_handle(
+                _action_body(action, flightsql.ACTION_CLOSE_PREPARED_REQ)
+            )
             with self._prepared_lock:
                 self._prepared.pop(handle, None)  # close is idempotent
-                self._bound.pop(handle, None)
             return
         raise NotImplementedError(f"action {action.type!r} not implemented")
 
@@ -456,11 +441,12 @@ class SparkFlightServer(flight.FlightServerBase):
             )
         row = [col[0].as_py() for col in table.columns]
         with self._prepared_lock:
-            if handle not in self._prepared:
+            statement = self._prepared.get(handle)
+            if statement is None:
                 raise flight.FlightServerError(
                     f"unknown prepared statement handle {handle!r}"
                 )
-            self._bound[handle] = row
+            statement[1] = row
 
     def list_actions(self, context):
         return [
@@ -502,18 +488,19 @@ def query_raw(port: int, sql: str) -> pa.Table:
         client.close()
 
 
-def query_two_step(port: int, sql: str) -> pa.Table:
-    """GetFlightInfo → DoGet path (client/main.py:21-24 ADBC analog)."""
+def _fetch(port: int, command: bytes) -> pa.Table:
+    """GetFlightInfo(command) → DoGet on every endpoint → one table."""
     client = flight.connect(f"grpc://127.0.0.1:{port}")
     try:
-        descriptor = flight.FlightDescriptor.for_command(sql.encode("utf-8"))
-        info = client.get_flight_info(descriptor)
-        tables: list[pa.Table] = []
-        for endpoint in info.endpoints:
-            tables.append(client.do_get(endpoint.ticket).read_all())
-        return pa.concat_tables(tables)
+        info = client.get_flight_info(flight.FlightDescriptor.for_command(command))
+        return pa.concat_tables(client.do_get(ep.ticket).read_all() for ep in info.endpoints)
     finally:
         client.close()
+
+
+def query_two_step(port: int, sql: str) -> pa.Table:
+    """GetFlightInfo → DoGet path (client/main.py:21-24 ADBC analog)."""
+    return _fetch(port, sql.encode("utf-8"))
 
 
 def query_flightsql(port: int, sql: str) -> pa.Table:
@@ -521,16 +508,7 @@ def query_flightsql(port: int, sql: str) -> pa.Table:
     descriptor carries ``Any(CommandStatementQuery)``, the endpoint ticket
     is passed back opaquely — the exact wire exchange an ADBC /
     flightsql-go driver performs."""
-    client = flight.connect(f"grpc://127.0.0.1:{port}")
-    try:
-        descriptor = flight.FlightDescriptor.for_command(
-            flightsql.encode_command_statement_query(sql)
-        )
-        info = client.get_flight_info(descriptor)
-        tables = [client.do_get(ep.ticket).read_all() for ep in info.endpoints]
-        return pa.concat_tables(tables)
-    finally:
-        client.close()
+    return _fetch(port, flightsql.encode_command_statement_query(sql))
 
 
 def query_prepared(port: int, sql: str, params=None) -> pa.Table:
@@ -583,15 +561,7 @@ def query_prepared(port: int, sql: str, params=None) -> pa.Table:
 def get_sql_info(port: int, codes: list[int] | None = None) -> pa.Table:
     """Standard Flight SQL GetSqlInfo (main.go:170-191 analog): dense-union
     value column, optional code filter."""
-    client = flight.connect(f"grpc://127.0.0.1:{port}")
-    try:
-        descriptor = flight.FlightDescriptor.for_command(
-            flightsql.encode_command_get_sql_info(codes)
-        )
-        info = client.get_flight_info(descriptor)
-        return client.do_get(info.endpoints[0].ticket).read_all()
-    finally:
-        client.close()
+    return _fetch(port, flightsql.encode_command_get_sql_info(codes))
 
 
 def get_tables(
@@ -600,15 +570,7 @@ def get_tables(
     """Standard Flight SQL CommandGetTables (beyond the reference, which
     implements only GetSqlInfo — this is what ADBC's adbc_get_objects
     drives). Catalogs/db-schemas commands work the same way."""
-    client = flight.connect(f"grpc://127.0.0.1:{port}")
-    try:
-        descriptor = flight.FlightDescriptor.for_command(
-            flightsql.encode_command_get_tables(pattern, include_schema)
-        )
-        info = client.get_flight_info(descriptor)
-        return client.do_get(info.endpoints[0].ticket).read_all()
-    finally:
-        client.close()
+    return _fetch(port, flightsql.encode_command_get_tables(pattern, include_schema))
 
 
 # ---------------------------------------------------------------------------

@@ -22,6 +22,8 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
+from duckdb_server_spark import flightsql
+
 # The driver's test corpus tables (TESTDATA.md). Mirrors the view set the
 # oracle harness pre-registers.
 TABLES = (
@@ -247,16 +249,18 @@ def run_init_sql(spark: SparkSession, statements: Iterable[str]) -> None:
 
 def register_sql_info(spark: SparkSession) -> DataFrame:
     """The ``GetSqlInfo`` metadata analog (main.go:352-526): a small static
-    view describing the server. Reported truthfully (the reference reports
-    read_only=false even when the connection is read-only — main.go:357)."""
-    import pyspark
-
+    view of the facts GetSqlInfo serves (``flightsql.server_sql_info``),
+    each value as text."""
+    names = {
+        flightsql.FLIGHT_SQL_SERVER_NAME: "server_name",
+        flightsql.FLIGHT_SQL_SERVER_VERSION: "server_version",
+        flightsql.FLIGHT_SQL_SERVER_ARROW_VERSION: "server_arrow_version",
+        flightsql.FLIGHT_SQL_SERVER_READ_ONLY: "server_read_only",
+        flightsql.SQL_IDENTIFIER_QUOTE_CHAR: "identifier_quote_char",
+    }
     rows = [
-        ("server_name", "duckdb_server_spark"),
-        ("server_version", f"spark {pyspark.__version__}"),
-        ("server_arrow_version", "pyspark-arrow"),
-        ("server_read_only", "true"),
-        ("identifier_quote_char", '"'),
+        (names[code], str(value).lower() if isinstance(value, bool) else value)
+        for code, value in flightsql.server_sql_info().items()
     ]
     # SQL VALUES → JVM LocalRelation (a python-parallelized createDataFrame
     # pays a python-worker launch per slice on every evaluation).

@@ -229,6 +229,18 @@ def test_flight_server_accepts_duckdb_dialect(sql_session):
     assert sql_session.catalog.tableExists("orders")
 
 
+def test_division_dividend_spans_multiplicative_run():
+    """DuckDB evaluates ``*``, ``%`` and ``/`` left to right, so the
+    dividend of ``a * b / c`` is ``a * b``; a binary ``-`` ends the run."""
+    out = rewrite("SELECT a * b / c, x - y * z / w FROM t", duckdb_first=True)
+    assert out == (
+        "SELECT try_divide(CAST(a * b AS DOUBLE), c), "
+        "x - try_divide(CAST(y * z AS DOUBLE), w) FROM t"
+    )
+    out = rewrite("SELECT a % b / c FROM t", duckdb_first=True)
+    assert out == "SELECT try_divide(CAST(try_mod(a, b) AS DOUBLE), c) FROM t"
+
+
 def test_regexp_replace_flag_shim():
     out = rewrite("SELECT regexp_replace(s, '[0-9]', '', 'g') FROM t")
     assert out == "SELECT regexp_replace(s, '[0-9]', '') FROM t"

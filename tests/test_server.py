@@ -235,8 +235,10 @@ def test_prepared_statements_capped(spark, flight_port, monkeypatch):
             writer.write_batch(batch)
             writer.close()
         assert len(server._prepared) == cap
-        assert len(server._bound) == cap
         assert list(server._prepared) == handles[-cap:]
+        assert [row for _sql, row in server._prepared.values()] == [
+            [i] for i in range(10, cap + 10)
+        ]
         evicted = flightsql.encode_command_prepared_statement_query(handles[0])
         with pytest.raises(flight.FlightServerError, match="unknown prepared"):
             client.do_get(flight.Ticket(evicted)).read_all()
@@ -568,6 +570,78 @@ def test_xdbc_type_info(flight_port):
         info = client.get_flight_info(flight.FlightDescriptor.for_command(only_varchar))
         table = client.do_get(info.endpoints[0].ticket).read_all()
         assert table.column("type_name").to_pylist() == ["VARCHAR"]
+
+
+@pytest.mark.parametrize(
+    "command, schema",
+    [
+        (flightsql.encode_command_get_sql_info(), flightsql.SQL_INFO_SCHEMA),
+        (flightsql.encode_command_get_catalogs(), flightsql.GET_CATALOGS_SCHEMA),
+        (flightsql.encode_command_get_db_schemas(), flightsql.GET_DB_SCHEMAS_SCHEMA),
+        (flightsql.encode_command_get_tables(), flightsql.GET_TABLES_SCHEMA),
+        (
+            flightsql.encode_command_get_tables("nation", include_schema=True),
+            flightsql.GET_TABLES_SCHEMA_WITH_SCHEMA,
+        ),
+        (
+            flightsql.encode_command_get_primary_keys("orders"),
+            flightsql.GET_PRIMARY_KEYS_SCHEMA,
+        ),
+        (flightsql.pack_any(flightsql.CMD_GET_EXPORTED_KEYS, b""), flightsql.GET_KEYS_SCHEMA),
+        (flightsql.encode_command_get_imported_keys("orders"), flightsql.GET_KEYS_SCHEMA),
+        (
+            flightsql.encode_command_get_xdbc_type_info(),
+            flightsql.GET_XDBC_TYPE_INFO_SCHEMA,
+        ),
+    ],
+    ids=[
+        "sql_info", "catalogs", "db_schemas", "tables", "tables_with_schema",
+        "primary_keys", "exported_keys", "imported_keys", "xdbc_type_info",
+    ],
+)
+def test_metadata_command_schemas_agree(flight_port, command, schema):
+    """GetSchema, the FlightInfo and the DoGet stream of every metadata
+    command all carry the standard Flight SQL schema."""
+    descriptor = flight.FlightDescriptor.for_command(command)
+    with flight.connect(f"grpc://127.0.0.1:{flight_port}") as client:
+        assert client.get_schema(descriptor).schema.equals(schema)
+        info = client.get_flight_info(descriptor)
+        assert info.schema.equals(schema)
+        reader = client.do_get(info.endpoints[0].ticket)
+        assert reader.schema.equals(schema)
+        assert reader.read_all().schema.equals(schema)
+
+
+def test_unknown_flightsql_command_rejected(flight_port):
+    """A Flight SQL command the server does not speak is refused by name
+    from GetFlightInfo, GetSchema and DoGet alike."""
+    command = flightsql.pack_any(
+        flightsql.TYPE_URL_PREFIX + "CommandGetCrossReference", b""
+    )
+    descriptor = flight.FlightDescriptor.for_command(command)
+    with flight.connect(f"grpc://127.0.0.1:{flight_port}") as client:
+        for rpc in (
+            lambda: client.get_flight_info(descriptor),
+            lambda: client.get_schema(descriptor),
+            lambda: client.do_get(flight.Ticket(command)).read_all(),
+        ):
+            with pytest.raises(pa.ArrowException, match="unsupported Flight SQL command"):
+                rpc()
+
+
+def test_sql_info_view_matches_get_sql_info(spark, flight_port):
+    """The ``sql_info`` view and GetSqlInfo report the same server facts."""
+    wire = {
+        r["info_name"]: r["value"] for r in srv.get_sql_info(flight_port).to_pylist()
+    }
+    view = {
+        r.info_name: r.value for r in spark.sql("SELECT * FROM sql_info").collect()
+    }
+    assert view["server_arrow_version"] == wire[flightsql.FLIGHT_SQL_SERVER_ARROW_VERSION]
+    assert view["server_version"] == wire[flightsql.FLIGHT_SQL_SERVER_VERSION]
+    assert view["server_name"] == wire[flightsql.FLIGHT_SQL_SERVER_NAME]
+    assert view["identifier_quote_char"] == wire[flightsql.SQL_IDENTIFIER_QUOTE_CHAR]
+    assert view["server_read_only"] == "true" and wire[flightsql.FLIGHT_SQL_SERVER_READ_ONLY]
 
 
 def test_prepared_statement_parameter_binding(flight_port):
