@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 
 import itertools
 
+from duckdb_server_spark.dialect_rewrites.core import STORAGE_TYPES, spark_type
+
 # unique suffixes for per-statement scratch views: concurrent DML in one
 # session must never share a name (the LRU tracker bounds their count)
 _SCRATCH_IDS = itertools.count()
@@ -75,83 +77,20 @@ class Sequence:
 # type mapping: DuckDB column types -> Spark SQL types
 # ---------------------------------------------------------------------------
 
-_SIMPLE_TYPES = {
-    "TINYINT": "TINYINT", "INT1": "TINYINT",
-    "SMALLINT": "SMALLINT", "INT2": "SMALLINT", "SHORT": "SMALLINT",
-    "INTEGER": "INT", "INT": "INT", "INT4": "INT", "SIGNED": "INT",
-    "BIGINT": "BIGINT", "INT8": "BIGINT", "LONG": "BIGINT",
-    "HUGEINT": "DECIMAL(38,0)", "UHUGEINT": "DECIMAL(38,0)",
-    "UTINYINT": "SMALLINT", "USMALLINT": "INT", "UINTEGER": "BIGINT",
-    "UBIGINT": "DECIMAL(20,0)",
-    "FLOAT": "FLOAT", "REAL": "FLOAT", "FLOAT4": "FLOAT",
-    "DOUBLE": "DOUBLE", "FLOAT8": "DOUBLE",
-    "VARCHAR": "STRING", "TEXT": "STRING", "STRING": "STRING",
-    "CHAR": "STRING", "BPCHAR": "STRING",
-    "BOOLEAN": "BOOLEAN", "BOOL": "BOOLEAN", "LOGICAL": "BOOLEAN",
-    "DATE": "DATE",
-    # DuckDB TIMESTAMP is wall-clock (no zone): Spark's NTZ flavor
-    "TIMESTAMP": "TIMESTAMP_NTZ", "DATETIME": "TIMESTAMP_NTZ",
-    "TIMESTAMPTZ": "TIMESTAMP",
-    # TIME has no Spark type; served as its ISO string form (the same
-    # representation the make_time/typed-literal rewrites use)
-    "TIME": "STRING",
-    "BLOB": "BINARY", "BYTEA": "BINARY", "BINARY": "BINARY",
-    "VARBINARY": "BINARY",
-    "UUID": "STRING", "JSON": "STRING",
-}
-
-
 def duck_type_to_spark(t: str, state) -> tuple[str, str | None]:
-    """DuckDB type spelling -> (Spark type text, enum-type-name | None).
-    Fails closed (ValueError) on types with no honest Spark analog."""
-    t = t.strip()
-    # N-dimensional list suffixes: T[] / T[][]
-    if t.endswith("]"):
-        m = re.match(r"^(.*?)\s*\[\s*\d*\s*\]$", t, re.DOTALL)
-        if m:
-            inner, _ = duck_type_to_spark(m.group(1), state)
-            return f"ARRAY<{inner}>", None
-    up = re.sub(r"\s+", " ", t.upper())
-    if up == "DOUBLE PRECISION":
-        return "DOUBLE", None
-    if up in ("TIMESTAMP WITH TIME ZONE",):
-        return "TIMESTAMP", None
-    if up in ("TIME WITH TIME ZONE", "TIMETZ"):
-        return "STRING", None
-    m = re.match(r"^([A-Za-z_]\w*)\s*(\((.*)\))?$", t, re.DOTALL)
-    if not m:
+    """DuckDB column type -> (Spark type text, enum-type-name | None),
+    through the storage spelling of the shared type map; a declared ENUM
+    serves as a validated string. Fails closed (ValueError) on types with
+    no honest Spark analog."""
+    enums = state.enums if state is not None else {}
+    spark = spark_type(
+        t, {**{e.upper(): "STRING" for e in enums}, **STORAGE_TYPES}
+    )
+    if spark is None:
         raise ValueError(f"CREATE TABLE: unsupported type {t!r}")
-    base, args = m.group(1).upper(), m.group(3)
-    if base in ("DECIMAL", "NUMERIC"):
-        return (f"DECIMAL({args})" if args else "DECIMAL(18,3)"), None
-    if base in ("STRUCT", "ROW") and args is not None:
-        fields = []
-        for item in _split_commas(args):
-            fm = re.match(r'^\s*"?([A-Za-z_]\w*)"?\s+(.+)$', item, re.DOTALL)
-            if not fm:
-                raise ValueError(f"CREATE TABLE: bad struct field {item!r}")
-            ft, _ = duck_type_to_spark(fm.group(2), state)
-            fields.append(f"{fm.group(1)}: {ft}")
-        return f"STRUCT<{', '.join(fields)}>", None
-    if base == "MAP" and args is not None:
-        kv = _split_commas(args)
-        if len(kv) != 2:
-            raise ValueError(f"CREATE TABLE: bad MAP type {t!r}")
-        kt, _ = duck_type_to_spark(kv[0], state)
-        vt, _ = duck_type_to_spark(kv[1], state)
-        return f"MAP<{kt}, {vt}>", None
-    if base in _SIMPLE_TYPES:
-        return _SIMPLE_TYPES[base], None
-    low = m.group(1).lower()
-    if state is not None and low in state.enums:
-        return "STRING", low  # enums serve as validated strings
-    raise ValueError(f"CREATE TABLE: unsupported type {t!r}")
-
-
-def _split_commas(s: str) -> list[str]:
-    from duckdb_server_spark.dialect import _split_top_commas
-
-    return [p for p in _split_top_commas(s) if p.strip()]
+    low = t.strip().lower()
+    return spark, (low if low in enums and low.upper() not in STORAGE_TYPES
+                   else None)
 
 
 # ---------------------------------------------------------------------------

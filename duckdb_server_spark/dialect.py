@@ -91,6 +91,7 @@ from duckdb_server_spark.dialect_rewrites.core import (  # noqa: F401
     _literal_value,
     _mask,
     _matching_paren,
+    _rewrite_cast_types,
     _split_top_commas,
     _unmask,
 )
@@ -192,7 +193,6 @@ from duckdb_server_spark.dialect_rewrites.nested import (  # noqa: F401
     _rewrite_interval_varchar,
     _rewrite_libm,
     _rewrite_list_set_ops,
-    _rewrite_nested_cast_types,
     _rewrite_string_array_casts,
     _rewrite_in_subquery_3vl,
     _rewrite_nested_comparisons,
@@ -345,78 +345,6 @@ def rewrite(sql: str, spark=None, duckdb_first: bool = False) -> str:
     masked = _rewrite_strftime(masked, table)
     masked = _rewrite_datediff_units(masked, table)
     masked = _rewrite_interval_varchar(masked, table)
-    masked = _rewrite_nested_cast_types(masked)
-    masked = _rewrite_string_array_casts(masked)
-    masked = _rewrite_struct_map(masked, table)
-    masked = _rewrite_ordered_aggs(masked)
-    masked = _rewrite_lateral_values(masked)
-    # a VARCHAR cast of a BINARY column takes DuckDB's escaped blob
-    # rendering (dd_blob_str), not the raw-bytes reinterpretation
-    if kinds and any(k == "binary" for k in kinds.values()):
-        def _bin_cast(mm: re.Match) -> str:
-            col = mm.group(1)
-            if kinds.get(col.split(".")[-1].lower()) == "binary":
-                return f"dd_blob_str({col})"
-            return mm.group(0)
-
-        masked = re.sub(
-            r"\bCAST\s*\(\s*([A-Za-z_][\w.]*)\s+AS\s+(?:VARCHAR|STRING)"
-            r"\s*\)",
-            _bin_cast,
-            masked,
-            flags=re.IGNORECASE,
-        )
-        masked = re.sub(
-            r"\b([A-Za-z_][\w.]*)\s*::\s*(?:VARCHAR|STRING)\b",
-            _bin_cast,
-            masked,
-            flags=re.IGNORECASE,
-        )
-    # DuckDB ROUNDS numeric→integer casts where Spark truncates — a
-    # silent off-by-one on every fractional cast. DOUBLE/FLOAT round
-    # half-to-even (rint), DECIMAL rounds half away from zero (round);
-    # both probed on live 1.0. Bare-column operands resolve through the
-    # catalog kinds; numeric literals fold at rewrite time (decimal
-    # rule). Complex expressions stay untouched (type unknowable from
-    # text) — the covered shapes are the serving-path hot ones.
-    _INT_TYPES = (
-        r"(?:TINYINT|SMALLINT|INTEGER|INT[1248]|INT|BIGINT|SHORT|LONG"
-        r"|SIGNED|UTINYINT|USMALLINT|UINTEGER|UBIGINT|HUGEINT)"
-    )
-
-    def _cast_round(mm: re.Match) -> str:
-        col, ty = mm.group(1), mm.group(2)
-        if re.fullmatch(r"[+-]?\d+\.\d+", col):
-            import decimal as _dec
-
-            v = _dec.Decimal(col).quantize(
-                _dec.Decimal(1), rounding=_dec.ROUND_HALF_UP
-            )
-            return f"CAST({v} AS {ty})"
-        kind = (kinds or {}).get(col.split(".")[-1].lower())
-        if kind == "double":
-            return f"CAST(rint({col}) AS {ty})"
-        if kind == "decimal":
-            return f"CAST(round({col}) AS {ty})"
-        return mm.group(0)
-
-    masked = re.sub(
-        rf"\bCAST\s*\(\s*([A-Za-z_][\w.]*|[+-]?\d+\.\d+)\s+AS\s+"
-        rf"({_INT_TYPES})\s*\)",
-        _cast_round,
-        masked,
-        flags=re.IGNORECASE,
-    )
-    masked = re.sub(
-        rf"\b([A-Za-z_][\w.]*|\d+\.\d+)\s*::\s*({_INT_TYPES})\b(?!\w)",
-        _cast_round,
-        masked,
-        flags=re.IGNORECASE,
-    )
-    masked = re.sub(r"\bAS\s+VARCHAR\b(?!\s*\()", "AS STRING", masked,
-                    flags=re.IGNORECASE)
-    masked = re.sub(r"::\s*VARCHAR\b(?!\s*\()", "::STRING", masked,
-                    flags=re.IGNORECASE)
     # literal blob casts decode DuckDB's \xNN escapes into a hex literal
     # (Spark's X'…') — a plain CAST(AS BINARY) would keep the backslash
     # bytes verbatim, a silent value divergence
@@ -443,33 +371,32 @@ def rewrite(sql: str, spark=None, duckdb_first: bool = False) -> str:
         r"\bCAST\s*\(\s*\x00(\d+)\x00\s+AS\s+BLOB\s*\)", _blob_lit, masked,
         flags=re.IGNORECASE,
     )
-    masked = re.sub(r"::\s*BLOB\b", "::BINARY", masked, flags=re.IGNORECASE)
-    # BIT strings are carried as '0'/'1' text (typed-literal rewrite);
-    # `AS BIT` is left alone — 'bit' is a plausible column alias
-    masked = re.sub(r"::\s*BIT\b", "::STRING", masked, flags=re.IGNORECASE)
-    masked = re.sub(
-        r"(::\s*|\bAS\s+)TIMESTAMPTZ\b", r"\1TIMESTAMP", masked,
-        flags=re.IGNORECASE,
-    )
-    # HUGEINT (int128) has no JVM primitive: DECIMAL(38,0) covers the
-    # integer-arithmetic uses (the ddl.py CREATE TABLE map agrees)
-    masked = re.sub(
-        r"(::\s*|\bAS\s+)U?HUGEINT\b", r"\1DECIMAL(38,0)", masked,
-        flags=re.IGNORECASE,
-    )
-    # fixed-size array types (FLOAT[3]) and bare array types (INT[]) in
-    # cast position → Spark ARRAY<T>; subscripts never follow :: or AS.
-    # Looped so nested lists (INT[][]) resolve innermost-out.
-    _ARRAY_TYPE_RE = re.compile(
-        r"(::\s*|\bAS\s+)((?:ARRAY<)*[A-Za-z]+>*)\s*\[\s*\d*\s*\]",
-        re.IGNORECASE,
-    )
-    while _ARRAY_TYPE_RE.search(masked):
-        masked = _ARRAY_TYPE_RE.sub(
-            lambda mm: f"{mm.group(1)}ARRAY<{mm.group(2)}>", masked
-        )
+    masked = _rewrite_cast_types(masked)
+    masked = _rewrite_string_array_casts(masked)
+    masked = _rewrite_struct_map(masked, table)
+    masked = _rewrite_ordered_aggs(masked)
+    masked = _rewrite_lateral_values(masked)
+    # a VARCHAR cast of a BINARY column takes DuckDB's escaped blob
+    # rendering (dd_blob_str), not the raw-bytes reinterpretation
+    if kinds and any(k == "binary" for k in kinds.values()):
+        def _bin_cast(mm: re.Match) -> str:
+            col = mm.group(1)
+            if kinds.get(col.split(".")[-1].lower()) == "binary":
+                return f"dd_blob_str({col})"
+            return mm.group(0)
 
-    masked = re.sub(r"\bAS\s+BLOB\b", "AS BINARY", masked, flags=re.IGNORECASE)
+        masked = re.sub(
+            r"\bCAST\s*\(\s*([A-Za-z_][\w.]*)\s+AS\s+STRING\s*\)",
+            _bin_cast,
+            masked,
+            flags=re.IGNORECASE,
+        )
+        masked = re.sub(
+            r"\b([A-Za-z_][\w.]*)\s*::\s*STRING\b",
+            _bin_cast,
+            masked,
+            flags=re.IGNORECASE,
+        )
     # ::JSON is a validating store-as-text cast in DuckDB (original
     # spacing preserved) — dropping it keeps the text identical; invalid
     # JSON then fails at USE time rather than cast time
@@ -561,22 +488,26 @@ _CURRENT_SETTING_RE = re.compile(
 
 
 
-# engine-setting defaults surfaced through current_setting(); SET
-# overrides land in DialectState.settings first
-def _resolve_current_setting(spark: SparkSession, sql: str) -> str:
+def _settings(spark: SparkSession) -> dict[str, str]:
+    """Engine settings as current_setting() and duckdb_settings() show
+    them: the defaults, overridden by SET (DialectState.settings)."""
     import os as _os
 
-    state = dialect_state(spark)
-    defaults = {
+    return {
         "threads": str(_os.cpu_count() or 1),
         "memory_limit": "128GB",
         "access_mode": "read_only",
         "default_order": "asc",
+        **dialect_state(spark).settings,
     }
+
+
+def _resolve_current_setting(spark: SparkSession, sql: str) -> str:
+    settings = _settings(spark)
 
     def sub(m):
         key = m.group(1).lower()
-        val = state.settings.get(key, defaults.get(key))
+        val = settings.get(key)
         if val is None:
             raise ValueError(f"current_setting: unknown setting {key!r}")
         return val if re.fullmatch(r"-?\d+", val) else f"'{val}'"
@@ -800,18 +731,9 @@ def _resolve_meta_tvfs(spark: SparkSession, sql: str) -> str:
         ]))
 
     def settings_frame() -> DataFrame:
-        import os as _os
-
-        state = dialect_state(spark)
-        merged = {
-            "threads": str(_os.cpu_count() or 1),
-            "memory_limit": "128GB",
-            "access_mode": "read_only",
-            "default_order": "asc",
-        }
-        merged.update(state.settings)
         rows = [
-            (k, v, "", "VARCHAR", "GLOBAL") for k, v in sorted(merged.items())
+            (k, v, "", "VARCHAR", "GLOBAL")
+            for k, v in sorted(_settings(spark).items())
         ]
         return spark.createDataFrame(rows, T.StructType([
             T.StructField("name", T.StringType(), True),

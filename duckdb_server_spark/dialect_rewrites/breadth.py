@@ -25,6 +25,10 @@ from duckdb_server_spark.dialect_rewrites.core import (  # noqa: F401
     _primary_fwd,
     _split_top_commas,
     _unmask,
+    DUCK_TYPES,
+    STORAGE_TYPES,
+    _TYPE_NAME,
+    spark_type,
 )
 
 from duckdb_server_spark.dialect_rewrites.exprs import (  # noqa: F401
@@ -145,28 +149,14 @@ def _fmt_to_printf(fmt: str) -> tuple[str, list[str | None]]:
 
 
 
-_DUCK_DDL_TYPES = {
-    "VARCHAR": "string", "TEXT": "string", "STRING": "string",
-    "BIGINT": "bigint", "INT8": "bigint", "LONG": "bigint",
-    "INTEGER": "int", "INT": "int", "INT4": "int",
-    "SMALLINT": "smallint", "INT2": "smallint", "TINYINT": "tinyint",
-    "DOUBLE": "double", "FLOAT8": "double", "FLOAT": "float",
-    "REAL": "float", "BOOLEAN": "boolean", "BOOL": "boolean",
-    "DATE": "date", "TIMESTAMP": "timestamp_ntz", "UUID": "string",
-}
-
-
-
 def _duck_json_spec_to_ddl(spec) -> str:
     """DuckDB from_json structure spec ('["BIGINT"]', '{"a":"VARCHAR"}')
     → Spark DDL type string; unknown type names fail closed."""
     if isinstance(spec, str):
-        t = spec.strip().upper()
-        if t.startswith("DECIMAL"):
-            return t.lower()
-        if t not in _DUCK_DDL_TYPES:
+        ddl = spark_type(spec, STORAGE_TYPES)
+        if ddl is None:
             raise ValueError(f"from_json: unsupported type {spec!r}")
-        return _DUCK_DDL_TYPES[t]
+        return ddl
     if isinstance(spec, list):
         if len(spec) != 1:
             raise ValueError("from_json: list spec needs one element type")
@@ -2645,52 +2635,10 @@ def _rewrite_regexp_split_to_table(s: str) -> str:
 # Spark only knows the DATE/TIMESTAMP/TIME/INTERVAL/X forms natively, and
 # its CAST defaults differ where DuckDB's carry parameters (plain DECIMAL
 # is DECIMAL(18,3) in DuckDB but DECIMAL(10,0) in Spark — a silent value
-# change without the explicit width).
-_TYPED_LITERAL_CAST: dict[str, str] = {
-    "decimal": "DECIMAL(18,3)",
-    "numeric": "DECIMAL(18,3)",
-    "hugeint": "DECIMAL(38,0)",
-    "uhugeint": "DECIMAL(38,0)",
-    "integer": "INT",
-    "int": "INT",
-    "int4": "INT",
-    "signed": "INT",
-    "bigint": "BIGINT",
-    "int8": "BIGINT",
-    "long": "BIGINT",
-    "smallint": "SMALLINT",
-    "int2": "SMALLINT",
-    "short": "SMALLINT",
-    "tinyint": "TINYINT",
-    "int1": "TINYINT",
-    "utinyint": "SMALLINT",
-    "usmallint": "INT",
-    "uinteger": "BIGINT",
-    "ubigint": "DECIMAL(20,0)",
-    "double": "DOUBLE",
-    "float8": "DOUBLE",
-    "float": "FLOAT",
-    "float4": "FLOAT",
-    "real": "FLOAT",
-    "boolean": "BOOLEAN",
-    "bool": "BOOLEAN",
-    "logical": "BOOLEAN",
-    "varchar": "STRING",
-    "text": "STRING",
-    "string": "STRING",
-    "bpchar": "STRING",
-    "blob": "BINARY",
-    "bytea": "BINARY",
-    "varbinary": "BINARY",
-    # instant type: Spark's TIMESTAMP is LTZ and the session is pinned
-    # UTC, so a TIMESTAMPTZ literal (offset spelling included) parses to
-    # the same instant DuckDB stores
-    "timestamptz": "TIMESTAMP",
-}
-
-
+# change without the explicit width), so every other name the type map
+# knows becomes a CAST to its Spark spelling.
 _TYPED_LITERAL_RE = re.compile(
-    r"\b([A-Za-z_]\w*)\s+(\x00\d+\x00)"
+    rf"\b({_TYPE_NAME})\s+(\x00\d+\x00)", re.IGNORECASE
 )
 
 
@@ -2939,7 +2887,8 @@ def _rewrite_typed_literals(s: str, table: list[str]) -> str:
             if lit is not None and re.fullmatch(r"[01]+", lit):
                 return m.group(2)
             return m.group(0)
-        target = _TYPED_LITERAL_CAST.get(kw)
+        target = (None if kw in ("date", "timestamp")
+                  else spark_type(kw))
         if target is None:
             return m.group(0)
         return f"CAST({m.group(2)} AS {target})"
@@ -3374,23 +3323,20 @@ def _time_literal_micros(arg: str, table: list[str]) -> int | None:
 # ANSI error where DuckDB succeeds — visible, never silently wrong);
 # the DOUBLE→int truncate-vs-round divergence is the standing
 # documented acceptance (declared queries floor first).
-_INT_TYPE_NAMES = r"(?:INTEGER|INT4|INT8|INT2|INT1|BIGINT|SMALLINT|TINYINT|LONG|INT)"
+# every name whose Spark spelling holds integers only (HUGEINT's
+# DECIMAL(38,0) included), longest first
+_INT_TARGETS = "(?:" + "|".join(sorted(
+    (n for n, t in DUCK_TYPES.items()
+     if t in ("TINYINT", "SMALLINT", "INT", "BIGINT") or t.endswith(",0)")),
+    key=len, reverse=True)) + ")"
 _STR_INT_CAST_RE = re.compile(
-    rf"\bCAST\s*\(\s*(\x00\d+\x00)\s+AS\s+({_INT_TYPE_NAMES})\s*\)",
+    rf"\bCAST\s*\(\s*(\x00\d+\x00)\s+AS\s+({_INT_TARGETS})\s*\)",
     re.IGNORECASE,
 )
 _STR_INT_DCOLON_RE = re.compile(
-    rf"(\x00\d+\x00)\s*::\s*({_INT_TYPE_NAMES})\b", re.IGNORECASE
+    rf"(\x00\d+\x00)\s*::\s*({_INT_TARGETS})\b", re.IGNORECASE
 )
 _TRY_CAST_INT_RE = re.compile(r"\bTRY_CAST\s*\(", re.IGNORECASE)
-
-_SPARK_INT_NAME = {
-    "int": "INT", "integer": "INT", "int4": "INT",
-    "bigint": "BIGINT", "int8": "BIGINT", "long": "BIGINT",
-    "smallint": "SMALLINT", "int2": "SMALLINT",
-    "tinyint": "TINYINT", "int1": "TINYINT",
-}
-
 
 def _duck_str_to_int(text: str) -> int | None:
     t = text.strip()
@@ -3406,9 +3352,15 @@ def _duck_str_to_int(text: str) -> int | None:
 
 _FLOAT_INT_CAST_RE = re.compile(r"\bCAST\s*\(", re.IGNORECASE)
 _FLOAT_INT_DCOLON_RE = re.compile(
-    rf"::\s*({_INT_TYPE_NAMES})\b", re.IGNORECASE
+    rf"::\s*({_INT_TARGETS})\b", re.IGNORECASE
 )
 _AVG_RE = re.compile(r"\bAVG\s*\(", re.IGNORECASE)
+
+
+_SRC_TYPE = r"([A-Za-z_]\w*)\s*(?:\(\s*\d+\s*(?:,\s*\d+\s*)?\))?"
+# keyed by the Spark spelling of a bare source type name (DECIMAL,
+# NUMERIC and DEC all spell DECIMAL(18,3); HUGEINT is integral)
+_TYPE_ROUND = {"DOUBLE": "even", "FLOAT": "even", "DECIMAL(18,3)": "away"}
 
 
 def _float_src_round(expr: str, kinds: dict[str, str] | None) -> str | None:
@@ -3429,18 +3381,14 @@ def _float_src_round(expr: str, kinds: dict[str, str] | None) -> str | None:
     if re.match(r"(?is)^(?:TRY_)?CAST\s*\(", e):
         open_idx = e.index("(")
         if _matching_paren(e, open_idx) == len(e) - 1:
-            mm = re.search(
-                r"(?is)\bAS\s+([A-Za-z_]\w*)\s*"
-                r"(?:\(\s*\d+\s*(?:,\s*\d+\s*)?\))?\s*\)$",
-                e,
-            )
+            mm = re.search(rf"(?is)\bAS\s+{_SRC_TYPE}\s*\)$", e)
             if mm:
-                t = mm.group(1).lower()
-                if t in ("double", "float", "real", "float4", "float8"):
-                    return "even"
-                if t in ("decimal", "numeric", "dec"):
-                    return "away"
+                return _TYPE_ROUND.get(spark_type(mm.group(1)))
         return None
+    # a postfix cast (3.7::FLOAT8) names its own type
+    mm = re.search(rf"(?s)::\s*{_SRC_TYPE}$", e)
+    if mm and _primary_back(e, len(e)) == 0:
+        return _TYPE_ROUND.get(spark_type(mm.group(1)))
     if kinds and re.fullmatch(r"[A-Za-z_][\w.]*", e):
         k = kinds.get(e.split(".")[-1].lower())
         if k == "double":
@@ -3469,7 +3417,7 @@ def _rewrite_float_int_casts(
             continue
         inner = s[open_idx + 1 : close]
         mm = re.search(
-            rf"\s+AS\s+({_INT_TYPE_NAMES})\s*$", inner, re.IGNORECASE
+            rf"\s+AS\s+({_INT_TARGETS})\s*$", inner, re.IGNORECASE
         )
         if not mm:
             pos = m.end()
@@ -3479,7 +3427,7 @@ def _rewrite_float_int_casts(
         if kind is None:
             pos = m.end()
             continue
-        t = _SPARK_INT_NAME[mm.group(1).lower()]
+        t = DUCK_TYPES[mm.group(1).upper()]
         fn = "bround" if kind == "even" else "round"
         repl = f"CAST({fn}({e.strip()}, 0) AS {t})"
         s = s[: m.start()] + repl + s[close + 1 :]
@@ -3492,7 +3440,7 @@ def _rewrite_float_int_casts(
         if kind is None:
             pos = m.end()
             continue
-        t = _SPARK_INT_NAME[m.group(1).lower()]
+        t = DUCK_TYPES[m.group(1).upper()]
         fn = "bround" if kind == "even" else "round"
         repl = f"CAST({fn}({e}, 0) AS {t})"
         s = s[:lstart] + repl + s[m.end() :]
@@ -3591,7 +3539,7 @@ def _rewrite_string_int_casts(s: str, table: list[str]) -> str:
         v = _duck_str_to_int(_literal_value(entry))
         if v is None:
             return m.group(0)  # DuckDB would error too — stay native
-        return f"CAST({v} AS {_SPARK_INT_NAME[m.group(2).lower()]})"
+        return f"CAST({v} AS {DUCK_TYPES[m.group(2).upper()]})"
 
     s = _STR_INT_CAST_RE.sub(fold, s)
     s = _STR_INT_DCOLON_RE.sub(fold, s)
@@ -3601,13 +3549,13 @@ def _rewrite_string_int_casts(s: str, table: list[str]) -> str:
         close = _matching_paren(s, open_idx)
         inner = s[open_idx + 1 : close]
         mm = re.search(
-            rf"\s+AS\s+({_INT_TYPE_NAMES})\s*$", inner, re.IGNORECASE
+            rf"\s+AS\s+({_INT_TARGETS})\s*$", inner, re.IGNORECASE
         )
         if not mm:
             pos = close
             continue
         e = inner[: mm.start()]
-        t = _SPARK_INT_NAME[mm.group(1).lower()]
+        t = DUCK_TYPES[mm.group(1).upper()]
         repl = (
             f"coalesce(try_cast({e} AS {t}), "
             f"try_cast(round(try_cast({e} AS DOUBLE)) AS {t}))"
@@ -3701,10 +3649,13 @@ def _rewrite_extract_epoch(s: str, table: list[str] | None = None) -> str:
 # casts fold here exactly; non-literal decimal-typed expressions keep
 # Spark's native rounding — the residual is type-inference-dependent
 # and flagged as an acceptance rather than silently guessed.
+_DEC_TYPE = (
+    r"((?:DECIMAL|NUMERIC|DEC)\s*\(\s*\d+\s*,\s*\d+\s*\)"
+    r"|(?:DECIMAL|NUMERIC|DEC)\b(?!\s*[(\[]))"
+)
 _DEC_CAST_LIT_RE = re.compile(
-    r"\bCAST\s*\(\s*(-?\d+(?:\.\d+)?)\s+AS\s+DECIMAL\s*\(\s*(\d+)\s*,"
-    r"\s*(\d+)\s*\)\s*\)"
-    r"|(\d+(?:\.\d+)?)\s*::\s*DECIMAL\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)",
+    rf"\bCAST\s*\(\s*(-?\d+(?:\.\d+)?)\s+AS\s+{_DEC_TYPE}\s*\)"
+    rf"|(\d+(?:\.\d+)?)\s*::\s*{_DEC_TYPE}",
     re.IGNORECASE,
 )
 
@@ -3713,9 +3664,9 @@ def _rewrite_decimal_literal_casts(s: str) -> str:
     from decimal import ROUND_DOWN, Decimal
 
     def sub(m: re.Match) -> str:
-        lit = m.group(1) or m.group(4)
-        p = int(m.group(2) or m.group(5))
-        sc = int(m.group(3) or m.group(6))
+        lit = m.group(1) or m.group(3)
+        ty = spark_type(m.group(2) or m.group(4))  # bare: DECIMAL(18,3)
+        p, sc = map(int, re.findall(r"\d+", ty))
         if sc > p:
             return m.group(0)
         d = Decimal(lit).quantize(Decimal(1).scaleb(-sc),

@@ -1,4 +1,9 @@
-"""Dialect core: literal masking, balanced-paren/keyword scanners, hash primitives, dialect/serving state, and the run_sql late-binding indirection (split from dialect.py, round 11)."""
+"""Dialect core: literal masking, balanced-paren/keyword scanners, the
+one DuckDB→Spark type-name map (:func:`spark_type`, used by every cast
+target, typed literal, ALTER/CREATE TABLE column, read_csv column and
+from_json spec, with the storage spelling for stored columns) and its
+reverse for DESCRIBE/typeof, the cast-target pass, hash primitives, and
+the run_sql late-binding indirection (split from dialect.py, round 11)."""
 
 from __future__ import annotations
 
@@ -156,6 +161,174 @@ def _find_top_keyword(s: str, words: tuple[str, ...], start: int = 0) -> tuple[i
 def _masked_literal(table: list[str], text: str) -> str:
     table.append("'" + text.replace("'", "''") + "'")
     return f"\x00{len(table) - 1}\x00"
+
+
+
+# ---------------------------------------------------------------------------
+# DuckDB type names -> Spark SQL type spellings
+# ---------------------------------------------------------------------------
+
+# The one DuckDB→Spark type-name map, for every position a client writes
+# a type: cast targets, typed literals, ALTER TABLE, read_csv(columns=…),
+# CREATE TABLE columns and from_json specs. Unsigned integers widen to the
+# next signed type without DuckDB's range check; HUGEINT (int128) has no
+# JVM primitive and rides DECIMAL(38,0). Names it does not know (TIME,
+# INTERVAL, JSON, BIT …) are left to the rules that own them.
+DUCK_TYPES = {
+    "TINYINT": "TINYINT", "INT1": "TINYINT",
+    "SMALLINT": "SMALLINT", "INT2": "SMALLINT", "SHORT": "SMALLINT",
+    "INTEGER": "INT", "INT": "INT", "INT4": "INT", "SIGNED": "INT",
+    "BIGINT": "BIGINT", "INT8": "BIGINT", "LONG": "BIGINT",
+    "HUGEINT": "DECIMAL(38,0)", "UHUGEINT": "DECIMAL(38,0)",
+    "UTINYINT": "SMALLINT", "USMALLINT": "INT", "UINTEGER": "BIGINT",
+    "UBIGINT": "DECIMAL(20,0)",
+    "FLOAT": "FLOAT", "REAL": "FLOAT", "FLOAT4": "FLOAT",
+    "DOUBLE": "DOUBLE", "FLOAT8": "DOUBLE", "DOUBLE PRECISION": "DOUBLE",
+    "VARCHAR": "STRING", "TEXT": "STRING", "STRING": "STRING",
+    "CHAR": "STRING", "BPCHAR": "STRING",
+    "BOOLEAN": "BOOLEAN", "BOOL": "BOOLEAN", "LOGICAL": "BOOLEAN",
+    "DATE": "DATE",
+    "TIMESTAMP": "TIMESTAMP", "DATETIME": "TIMESTAMP",
+    # instant type: Spark's TIMESTAMP is LTZ and the session is pinned
+    # UTC, so a TIMESTAMPTZ value (offset spelling included) parses to
+    # the same instant DuckDB stores
+    "TIMESTAMPTZ": "TIMESTAMP", "TIMESTAMP WITH TIME ZONE": "TIMESTAMP",
+    "BLOB": "BINARY", "BYTEA": "BINARY", "BINARY": "BINARY",
+    "VARBINARY": "BINARY",
+    "UUID": "STRING",
+}
+
+# Stored columns (CREATE TABLE, from_json specs): DuckDB TIMESTAMP is
+# wall-clock, Spark's NTZ flavor; TIME and JSON have no Spark type and are
+# kept as their text form (the representation the make_time/typed-literal
+# rewrites use).
+STORAGE_TYPES = {
+    **DUCK_TYPES,
+    "TIMESTAMP": "TIMESTAMP_NTZ", "DATETIME": "TIMESTAMP_NTZ",
+    "TIME": "STRING", "TIMETZ": "STRING", "TIME WITH TIME ZONE": "STRING",
+    "JSON": "STRING",
+}
+
+# The reverse map: Spark type → DuckDB spelling, shared by DESCRIBE,
+# information_schema and typeof(). Both Spark timestamp types map
+# to DuckDB TIMESTAMP: the warehouse loader relabels parquet NTZ
+# timestamps to UTC-pinned LTZ (session.py load_table — wall-clock
+# identical under the pinned UTC session), so Spark TIMESTAMP here IS the
+# engine's representation of DuckDB's TIMESTAMP over the same parquet.
+_DUCK_TYPE_NAMES = {
+    "tinyint": "TINYINT",
+    "smallint": "SMALLINT",
+    "int": "INTEGER",
+    "bigint": "BIGINT",
+    "float": "FLOAT",
+    "double": "DOUBLE",
+    "string": "VARCHAR",
+    "boolean": "BOOLEAN",
+    "date": "DATE",
+    "timestamp_ntz": "TIMESTAMP",
+    "timestamp": "TIMESTAMP",
+    "binary": "BLOB",
+}
+
+_STRUCT_FIELD_RE = re.compile(
+    r'\s*("?)([A-Za-z_]\w*|\x00\d+\x00)\1\s+(.+)', re.DOTALL
+)
+
+
+def spark_type(t: str, names: dict[str, str] = DUCK_TYPES) -> str | None:
+    """DuckDB type spelling -> Spark SQL type text, or None when any part
+    of it is a name ``names`` does not know. Covers ``T[]``/``T[N]``
+    lists, DECIMAL/NUMERIC/DEC (bare means DuckDB's DECIMAL(18,3)),
+    STRUCT/ROW(name T, …), MAP(K, V), parameterized names (VARCHAR(10))
+    and the multi-word names."""
+    t = t.strip()
+    if t.endswith("]"):
+        m = re.fullmatch(r"(.*?)\s*\[\s*\d*\s*\]", t, re.DOTALL)
+        inner = m and spark_type(m.group(1), names)
+        return inner and f"ARRAY<{inner}>"
+    up = re.sub(r"\s+", " ", t.upper())
+    if up in names:
+        return names[up]
+    m = re.fullmatch(r"([A-Za-z_]\w*)\s*(?:\((.*)\))?", t, re.DOTALL)
+    if m is None:
+        return None
+    base, args = m.group(1).upper(), m.group(2)
+    if base in ("DECIMAL", "NUMERIC", "DEC"):
+        return f"DECIMAL({args})" if args else "DECIMAL(18,3)"
+    if args is None:
+        return None
+    parts = _split_top_commas(args)
+    if base in ("STRUCT", "ROW") and parts:
+        fields = []
+        for item in parts:
+            fm = _STRUCT_FIELD_RE.fullmatch(item)
+            ft = fm and spark_type(fm.group(3), names)
+            if not ft:
+                return None
+            fields.append(f"{fm.group(2)}: {ft}")
+        return f"STRUCT<{', '.join(fields)}>"
+    if base == "MAP":
+        kv = [spark_type(p, names) for p in parts]
+        return f"MAP<{kv[0]}, {kv[1]}>" if len(kv) == 2 and all(kv) else None
+    return names.get(base)
+
+
+# a type name, the multi-word ones first
+_TYPE_NAME = (
+    r"(?:DOUBLE\s+PRECISION|TIMESTAMP\s+WITH\s+TIME\s+ZONE|[A-Za-z_]\w*)"
+)
+
+_DCOLON_TYPE_RE = re.compile(rf"::\s*{_TYPE_NAME}", re.IGNORECASE)
+
+_CAST_OPEN_RE = re.compile(r"\b(?:TRY_)?CAST\s*\(", re.IGNORECASE)
+
+_TOP_AS_SCAN_RE = re.compile(r"[()\[\]]|\bAS\b", re.IGNORECASE)
+
+
+def _respell(s: str, start: int, end: int) -> str:
+    """``s`` with the DuckDB type text ``s[start:end]`` spelled in Spark
+    (unchanged when the map does not know it or the spelling agrees)."""
+    ty = s[start:end].strip()
+    sp = spark_type(ty)
+    if sp is None or sp.upper() == re.sub(r"\s+", " ", ty.upper()):
+        return s
+    start = s.index(ty, start)
+    return s[:start] + sp + s[start + len(ty):]
+
+
+def _rewrite_cast_types(s: str) -> str:
+    """Spell every cast target in Spark through :func:`spark_type`: the
+    type after ``::`` and the type after the last top-level AS inside
+    ``CAST(``/``TRY_CAST(``. No other AS is touched, so column and table
+    aliases named like types (``SELECT 1 AS varchar``) keep their names.
+    Runs BEFORE _rewrite_string_array_casts (which needs the ARRAY<>
+    target) and _rewrite_struct_map (so a MAP(K, V) cast target is never
+    mistaken for DuckDB's two-list map() constructor)."""
+    pos = 0
+    while m := _DCOLON_TYPE_RE.search(s, pos):
+        start, end = m.start() + 2, m.end()
+        if p := re.match(r"\s*\(", s[end:]):
+            end = _matching_paren(s, end + p.end() - 1) + 1
+        while q := re.match(r"\s*\[\s*\d*\s*\]", s[end:]):
+            end += q.end()
+        s = _respell(s, start, end)
+        pos = start + 1
+    pos = 0
+    while m := _CAST_OPEN_RE.search(s, pos):
+        close = _matching_paren(s, m.end() - 1)
+        type_at, depth = -1, 0
+        for tok in _TOP_AS_SCAN_RE.finditer(s, m.end(), close):
+            c = tok.group(0)
+            if c in "([":
+                depth += 1
+            elif c in ")]":
+                depth -= 1
+            elif depth == 0:
+                type_at = tok.end()
+        if type_at >= 0:
+            s = _respell(s, type_at, close)
+        pos = m.end()
+    return s
 
 
 

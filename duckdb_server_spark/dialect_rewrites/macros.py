@@ -14,6 +14,7 @@ from duckdb_server_spark.dialect_rewrites.core import (  # noqa: F401
     _DD_HASH_COMBINE_K,
     _DD_HASH_MASK,
     _DD_NULL_HASH,
+    _DUCK_TYPE_NAMES,
     _dd_murmur64a,
     _dd_murmur_fin,
     _matching_paren,
@@ -178,14 +179,13 @@ def register_dialect_functions(spark: SparkSession) -> None:
         ") END"
     )
 
-    # typeof → DuckDB type spellings (shares the DESCRIBE name map's
-    # scalar rules; one array level via the LIKE branch, upper() covers
-    # decimal(p,s) and the long tail)
-    scalar_case = (
-        "CASE t WHEN 'int' THEN 'INTEGER' WHEN 'string' THEN 'VARCHAR' "
-        "WHEN 'binary' THEN 'BLOB' WHEN 'timestamp_ntz' THEN 'TIMESTAMP' "
-        "WHEN 'timestamp' THEN 'TIMESTAMP' ELSE upper(t) END"
-    )
+    # typeof → DuckDB type spellings from the DESCRIBE name map (the
+    # entries upper() does not already give; one array level via the
+    # LIKE branch, upper() covers decimal(p,s) and the long tail)
+    scalar_case = "CASE t {} ELSE upper(t) END".format(" ".join(
+        f"WHEN '{name}' THEN '{duck}'"
+        for name, duck in _DUCK_TYPE_NAMES.items() if duck != name.upper()
+    ))
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION dd_typeof_scalar(t STRING) "
         f"RETURNS STRING RETURN {scalar_case}"

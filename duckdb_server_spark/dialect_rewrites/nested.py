@@ -591,84 +591,22 @@ def _rewrite_string_array_casts(s: str) -> str:
     cast. Covers the two textually-recognizable string-typed operands:
     a string literal (mask token) and the dd_json_extract shims; JSON
     text is valid from_json input by construction. Runs after
-    _rewrite_nested_cast_types (which spells the ARRAY<> target)."""
+    _rewrite_cast_types (which spells the ARRAY<> target)."""
     pos = 0
     while m := _STR_ARRAY_CAST_RE.search(s, pos):
         cast_open = s.index("(", m.start())
         cast_close = _matching_paren(s, cast_open)
         body = s[cast_open + 1 : cast_close]
-        am = re.search(
-            r"(?i)\s+AS\s+(ARRAY\s*<.*>|[A-Za-z_]\w*"
-            r"(?:\s*\(\s*\d+\s*(?:,\s*\d+)?\s*\))?\s*\[\s*\])\s*$",
-            body,
-        )
+        am = re.search(r"(?i)\s+AS\s+(ARRAY\s*<.*>)\s*$", body)
         if not am:
             pos = cast_close + 1
             continue
         operand = body[: am.start()].strip()
-        ty = am.group(1).strip()
-        if ty.endswith("]"):  # bare-word T[] → ARRAY<T>
-            ty = "ARRAY<" + re.sub(r"\s*\[\s*\]$", "", ty) + ">"
-        ty = re.sub(r"(?i)\bVARCHAR\b|\bBPCHAR\b|\bTEXT\b", "STRING", ty)
-        repl = f"from_json({operand}, '{ty}')"
+        repl = f"from_json({operand}, '{am.group(1)}')"
         s = s[: m.start()] + repl + s[cast_close + 1 :]
         pos = m.start() + len(repl)
     return s
 
-
-def _rewrite_nested_cast_types(s: str) -> str:
-    """DuckDB STRUCT(name TYPE, ...) / MAP(K, V) type spellings in cast
-    position → Spark STRUCT<name: TYPE, ...> / MAP<K, V> (one level;
-    nested parens fall through to a Spark parse error, fail-closed).
-    Runs BEFORE _rewrite_struct_map so a MAP(K, V) cast target is never
-    mistaken for DuckDB's two-list map() constructor."""
-
-    def _struct_type(mm: re.Match) -> str:
-        fields = []
-        for part in mm.group(2).split(","):
-            fm = re.match(r"\s*([A-Za-z_]\w*)\s+(.+?)\s*$", part)
-            if not fm:
-                return mm.group(0)
-            ft = re.sub(r"(?i)^VARCHAR$", "STRING", fm.group(2).strip())
-            ft = re.sub(r"(?i)^([A-Za-z]+)\s*\[\s*\d*\s*\]$",
-                        lambda am: f"ARRAY<{am.group(1)}>", ft)
-            fields.append(f"{fm.group(1)}: {ft}")
-        return f"{mm.group(1)}STRUCT<{', '.join(fields)}>"
-
-    s = re.sub(
-        r"(::\s*|\bAS\s+)STRUCT\s*\(([^()]*)\)",
-        _struct_type,
-        s,
-        flags=re.IGNORECASE,
-    )
-    s = re.sub(
-        r"(::\s*|\bAS\s+)MAP\s*\(\s*([A-Za-z]+)\s*,\s*([A-Za-z]+)\s*\)",
-        lambda mm: "{}MAP<{}, {}>".format(
-            mm.group(1),
-            re.sub(r"(?i)^VARCHAR$", "STRING", mm.group(2)),
-            re.sub(r"(?i)^VARCHAR$", "STRING", mm.group(3)),
-        ),
-        s,
-        flags=re.IGNORECASE,
-    )
-    # round-14 hunt G: the []-array suffix on PARENTHESIZED type
-    # spellings — DECIMAL(5,2)[] and STRUCT(...)[]/MAP(...)[] (the
-    # latter already angle-converted above); the bare-word form
-    # (INT[]) is handled by the generic type pass
-    s = re.sub(
-        r"(::\s*|\bAS\s+)((?:DECIMAL|NUMERIC|DEC)\s*"
-        r"\(\s*\d+\s*(?:,\s*\d+)?\s*\))\s*\[\s*\d*\s*\]",
-        lambda mm: f"{mm.group(1)}ARRAY<{mm.group(2)}>",
-        s,
-        flags=re.IGNORECASE,
-    )
-    return re.sub(
-        r"(::\s*|\bAS\s+)((?:STRUCT|MAP)<[^<>]*(?:<[^<>]*>[^<>]*)*>)"
-        r"\s*\[\s*\d*\s*\]",
-        lambda mm: f"{mm.group(1)}ARRAY<{mm.group(2)}>",
-        s,
-        flags=re.IGNORECASE,
-    )
 
 
 

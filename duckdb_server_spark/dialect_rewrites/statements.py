@@ -19,7 +19,9 @@ from duckdb_server_spark.dialect_rewrites.core import (  # noqa: F401
     _matching_paren,
     _run_sql_late,
     _split_top_commas,
+    _DUCK_TYPE_NAMES,
     _unmask,
+    spark_type,
 )
 
 
@@ -1021,30 +1023,6 @@ _IMPORT_DB_RE = re.compile(
 )
 
 
-# DuckDB type spelling → Spark, for ALTER TABLE column types
-_ALTER_TYPE_MAP = {
-    "varchar": "STRING", "text": "STRING", "string": "STRING",
-    "blob": "BINARY", "bytea": "BINARY",
-    "integer": "INT", "int": "INT", "int4": "INT",
-    "bigint": "BIGINT", "int8": "BIGINT", "hugeint": "DECIMAL(38,0)",
-    "smallint": "SMALLINT", "int2": "SMALLINT", "tinyint": "TINYINT",
-    "double": "DOUBLE", "float8": "DOUBLE", "real": "FLOAT",
-    "float4": "FLOAT", "float": "FLOAT",
-    "boolean": "BOOLEAN", "bool": "BOOLEAN",
-    "date": "DATE", "timestamp": "TIMESTAMP",
-}
-
-
-
-def _alter_spark_type(t: str) -> str:
-    t = t.strip()
-    low = t.lower()
-    if low.startswith("decimal") or low.startswith("numeric"):
-        return re.sub(r"(?i)^numeric", "DECIMAL", t)
-    return _ALTER_TYPE_MAP.get(low, t.upper())
-
-
-
 def _run_alter(spark: SparkSession, state: DialectState, m: re.Match) -> None:
     """``ALTER TABLE t RENAME TO | RENAME COLUMN | ADD COLUMN | DROP
     COLUMN | ALTER COLUMN … TYPE`` over the temp-view warehouse: each
@@ -1091,7 +1069,7 @@ def _run_alter(spark: SparkSession, state: DialectState, m: re.Match) -> None:
                 return
             raise ValueError(f"ALTER TABLE: column {col!r} already exists")
         # DuckDB fills existing rows with the DEFAULT (NULL without one)
-        expr = F.expr(f"CAST({dflt or 'NULL'} AS {_alter_spark_type(typ)})")
+        expr = F.expr(f"CAST({dflt or 'NULL'} AS {spark_type(typ) or typ})")
         df.withColumn(col, expr).createOrReplaceTempView(name)
         return
     if dc := re.match(
@@ -1114,7 +1092,7 @@ def _run_alter(spark: SparkSession, state: DialectState, m: re.Match) -> None:
         if col.lower() not in by_lower:
             raise ValueError(f"ALTER TABLE: unknown column {col!r}")
         real = by_lower[col.lower()]
-        df.withColumn(real, F.col(real).cast(_alter_spark_type(typ))).createOrReplaceTempView(name)
+        df.withColumn(real, F.col(real).cast(spark_type(typ) or typ)).createOrReplaceTempView(name)
         return
     raise ValueError(f"unsupported ALTER TABLE action: {act!r}")
 
@@ -1670,7 +1648,7 @@ def _file_read_view(
                         f"read_csv(columns=...): bad entry {item.strip()!r}"
                     )
                 fields.append(
-                    f"`{km.group(1)}` {_alter_spark_type(km.group(2))}"
+                    f"`{km.group(1)}` {spark_type(km.group(2)) or km.group(2)}"
                 )
             reader = _hive_base(reader.schema(", ".join(fields)))
             df = reader.csv(path_list)
@@ -2035,37 +2013,10 @@ def _catalog_tables(spark: SparkSession) -> list:
 def show_tables_frame(spark: SparkSession) -> DataFrame:
     from pyspark.sql import types as T
 
-    names = sorted(
-        t.name
-        for t in spark.catalog.listTables()
-        if t.isTemporary and not t.name.startswith("__dd_")
-    )
     return spark.createDataFrame(
-        [(n,) for n in names],
+        [(t.name,) for t in _catalog_tables(spark)],
         T.StructType([T.StructField("name", T.StringType(), True)]),
     )
-
-
-# Spark type → DuckDB DESCRIBE spelling. Both Spark timestamp types map
-# to DuckDB TIMESTAMP: the warehouse loader relabels parquet NTZ
-# timestamps to UTC-pinned LTZ (session.py load_table — wall-clock
-# identical under the pinned UTC session), so Spark TIMESTAMP here IS the
-# engine's representation of DuckDB's TIMESTAMP over the same parquet.
-_DUCK_TYPE_NAMES = {
-    "tinyint": "TINYINT",
-    "smallint": "SMALLINT",
-    "int": "INTEGER",
-    "bigint": "BIGINT",
-    "float": "FLOAT",
-    "double": "DOUBLE",
-    "string": "VARCHAR",
-    "boolean": "BOOLEAN",
-    "date": "DATE",
-    "timestamp_ntz": "TIMESTAMP",
-    "timestamp": "TIMESTAMP",
-    "binary": "BLOB",
-}
-
 
 
 def _duck_type_name(dt) -> str:

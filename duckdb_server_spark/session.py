@@ -42,13 +42,17 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _cpus() -> int:
+    """Cores the engine sizes its session to (``SPARK_GRAFT_CPUS``)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
 def default_configs(shuffle_partitions: int | None = None) -> dict[str, str]:
     """Engine configs. ``SET``-style engine config is the analog of the
     reference's `SET secret_directory/extension_directory` (k8s/main.yaml:107-108).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus)
+        shuffle_partitions = _cpus()
     return {
         # Marker: this session was sized by the engine; load_table skips
         # its defensive small-input re-tuning when it sees this.
@@ -106,9 +110,8 @@ def get_spark(
     One shared session mirrors the reference's single shared connection
     (main.go:70) — all queries run on one engine instance.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name).master(
-        master or f"local[{cpus}]"
+        master or f"local[{_cpus()}]"
     )
     for k, v in default_configs().items():
         builder = builder.config(k, v)
@@ -180,7 +183,7 @@ def tune_session(spark: SparkSession, sf_dir: str) -> None:
             return
     except Exception:  # pragma: no cover - conf.get with default never raises
         pass
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _cpus()
     size = _corpus_bytes(sf_dir)
     # ≤64 MB corpus: a handful of partitions beats per-task overhead;
     # beyond that, one partition per core.

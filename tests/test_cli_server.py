@@ -104,21 +104,32 @@ def test_cli_server_rounds_doubles_like_duckdb(cli_port, warehouse):
     # Several of these products sit within an ulp of a .5 boundary at the
     # 6th decimal, where Spark's HALF_UP disagrees with DuckDB's rounding.
     # DuckDB divides the whole product (l_extendedprice * l_discount) / 1000.
+    # The casts spell their targets with DuckDB-only type names: bare
+    # DECIMAL is DECIMAL(18,3) and truncates, a DOUBLE source rounds.
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW lineitem AS SELECT * FROM "
         f"read_parquet('{warehouse}/lineitem.parquet')"
     )
-    for v in ("l_extendedprice * l_discount * 0.001",
-              "l_extendedprice * l_discount / 1000"):
-        sql = (
-            f"SELECT l_orderkey, l_linenumber, round({v}, 6) AS v "
-            "FROM lineitem ORDER BY l_orderkey, l_linenumber"
-        )
-        assert "dd_libm_round" in rewrite(sql, duckdb_first=True)
+    rounded = [
+        f"SELECT l_orderkey, l_linenumber, round({v}, 6) AS v "
+        "FROM lineitem ORDER BY l_orderkey, l_linenumber"
+        for v in ("l_extendedprice * l_discount * 0.001",
+                  "l_extendedprice * l_discount / 1000")
+    ]
+    for sql in rounded + [
+        "SELECT 1.2345::DECIMAL AS v",
+        "SELECT 7::INT4 AS v",
+        "SELECT 'a'::TEXT AS v",
+        "SELECT 3.7::FLOAT8::INT8 AS v",
+        "SELECT CAST({'a': 1, 'b': {'c': 'x'}} "
+        "AS STRUCT(a INT, b STRUCT(c VARCHAR))) AS v",
+    ]:
+        if sql in rounded:
+            assert "dd_libm_round" in rewrite(sql, duckdb_first=True)
         expected = con.execute(sql).fetchall()
         got = srv.query_flightsql(cli_port, sql).to_pylist()
-        assert [tuple(r.values()) for r in got] == expected, v
+        assert [tuple(r.values()) for r in got] == expected, sql
 
 
 @pytest.mark.parametrize(

@@ -7,6 +7,8 @@ lives in the declared queries s18/s18b/s18c.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from duckdb_server_spark.dialect import (
@@ -15,8 +17,10 @@ from duckdb_server_spark.dialect import (
     rewrite,
     run_script,
     run_sql,
+    serving_dialect,
     split_statements,
 )
+from duckdb_server_spark.dialect_rewrites.core import DUCK_TYPES, STORAGE_TYPES
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -239,6 +243,59 @@ def test_division_dividend_spans_multiplicative_run():
     )
     out = rewrite("SELECT a % b / c FROM t", duckdb_first=True)
     assert out == "SELECT try_divide(CAST(try_mod(a, b) AS DOUBLE), c) FROM t"
+
+
+@pytest.mark.parametrize("sql", ["SELECT 1 AS varchar", "SELECT x AS hugeint"])
+def test_type_named_aliases_are_not_cast_targets(sql):
+    assert rewrite(sql, duckdb_first=True) == sql
+
+
+_LITERAL_TEXT = {"BOOLEAN": "true", "DATE": "2020-01-01",
+                 "TIMESTAMP": "2020-01-01 00:00:00"}
+
+
+@pytest.mark.parametrize("name", sorted(DUCK_TYPES))
+def test_type_name_means_one_spark_type(sql_session, name):
+    """Casts (both spellings), typed literals and ALTER COLUMN TYPE take
+    the shared map's Spark type; CREATE TABLE takes its storage spelling."""
+    def dtype(spark_type):
+        return sql_session.sql(
+            f"SELECT CAST(NULL AS {spark_type}) AS c").schema["c"].dataType
+
+    want = DUCK_TYPES[name]
+    lit = _LITERAL_TEXT.get(want, "1")
+    with serving_dialect():
+        for sql in (f"SELECT CAST(NULL AS {name}) AS c",
+                    f"SELECT NULL::{name} AS c",
+                    f"SELECT {name} '{lit}' AS c"):
+            got = run_sql(sql_session, sql).schema["c"].dataType
+            assert got == dtype(want), sql
+    t = "tn_" + re.sub(r"\W", "_", name.lower())
+    run_script(sql_session, f"""
+        CREATE TABLE {t}_alter AS SELECT CAST(NULL AS STRING) AS c;
+        ALTER TABLE {t}_alter ALTER COLUMN c TYPE {name};
+        CREATE TABLE {t}_stored (c {name});
+    """)
+    assert sql_session.table(f"{t}_alter").schema["c"].dataType == dtype(want)
+    assert (sql_session.table(f"{t}_stored").schema["c"].dataType
+            == dtype(STORAGE_TYPES[name]))
+
+
+def test_typeof_matches_describe(sql_session):
+    """typeof() and DESCRIBE spell every scalar warehouse column alike."""
+    from duckdb_server_spark.session import TABLES, register_views
+
+    register_views(sql_session, SF_DIR)
+    for table in TABLES:
+        described = {
+            r.column_name: r.column_type
+            for r in run_sql(sql_session, f"DESCRIBE {table}").collect()
+            if not re.search(r"\[|STRUCT|MAP", r.column_type)
+        }
+        cols = ", ".join(f"typeof({c}) AS {c}" for c in described)
+        with serving_dialect():
+            row = run_sql(sql_session, f"SELECT {cols} FROM {table} LIMIT 1")
+            assert row.collect()[0].asDict() == described, table
 
 
 def test_regexp_replace_flag_shim():
