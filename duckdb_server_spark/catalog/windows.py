@@ -131,8 +131,10 @@ def w03_value_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         # above it are not), so the query paid the window twice
         # (measured: w07b 3.94->2.83 s, w04 0.94->0.86 s at sf0.1).
         # One hash repartition of the output pins a reusable shuffle
-        # boundary between window and sort. Rows/values unchanged.
-        .repartition("l_linenumber")
+        # boundary between window and sort. Rows/values unchanged. The
+        # key is unique per row; l_orderkey alone is the window's own
+        # partitioning, so Spark would drop that exchange.
+        .repartition("l_orderkey", "l_linenumber")
         .orderBy(
             F.col("l_orderkey").asc_nulls_last(), F.col("l_linenumber").asc_nulls_last()
         )

@@ -397,10 +397,6 @@ def rewrite(sql: str, spark=None, duckdb_first: bool = False) -> str:
             masked,
             flags=re.IGNORECASE,
         )
-    # ::JSON is a validating store-as-text cast in DuckDB (original
-    # spacing preserved) — dropping it keeps the text identical; invalid
-    # JSON then fails at USE time rather than cast time
-    masked = re.sub(r"::\s*JSON\b", "", masked, flags=re.IGNORECASE)
     # DuckDB `a // b` integer division → Spark DIV (both truncate toward
     # zero on integers: -7//2 = -3 on each engine; DuckDB 1.0's decimal
     # `//` is effectively float division — integer operands are the

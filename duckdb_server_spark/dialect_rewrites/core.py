@@ -172,8 +172,9 @@ def _masked_literal(table: list[str], text: str) -> str:
 # a type: cast targets, typed literals, ALTER TABLE, read_csv(columns=…),
 # CREATE TABLE columns and from_json specs. Unsigned integers widen to the
 # next signed type without DuckDB's range check; HUGEINT (int128) has no
-# JVM primitive and rides DECIMAL(38,0). Names it does not know (TIME,
-# INTERVAL, JSON, BIT …) are left to the rules that own them.
+# JVM primitive and rides DECIMAL(38,0). JSON is its text, as DuckDB
+# stores it. Names it does not know (TIME, INTERVAL, BIT …) are left to
+# the rules that own them.
 DUCK_TYPES = {
     "TINYINT": "TINYINT", "INT1": "TINYINT",
     "SMALLINT": "SMALLINT", "INT2": "SMALLINT", "SHORT": "SMALLINT",
@@ -195,18 +196,17 @@ DUCK_TYPES = {
     "TIMESTAMPTZ": "TIMESTAMP", "TIMESTAMP WITH TIME ZONE": "TIMESTAMP",
     "BLOB": "BINARY", "BYTEA": "BINARY", "BINARY": "BINARY",
     "VARBINARY": "BINARY",
-    "UUID": "STRING",
+    "UUID": "STRING", "JSON": "STRING",
 }
 
 # Stored columns (CREATE TABLE, from_json specs): DuckDB TIMESTAMP is
-# wall-clock, Spark's NTZ flavor; TIME and JSON have no Spark type and are
-# kept as their text form (the representation the make_time/typed-literal
-# rewrites use).
+# wall-clock, Spark's NTZ flavor; TIME has no Spark type and is kept as
+# its text form (the representation the make_time/typed-literal rewrites
+# use).
 STORAGE_TYPES = {
     **DUCK_TYPES,
     "TIMESTAMP": "TIMESTAMP_NTZ", "DATETIME": "TIMESTAMP_NTZ",
     "TIME": "STRING", "TIMETZ": "STRING", "TIME WITH TIME ZONE": "STRING",
-    "JSON": "STRING",
 }
 
 # The reverse map: Spark type → DuckDB spelling, shared by DESCRIBE,

@@ -573,24 +573,35 @@ def _rewrite_interval_chain_arith(s: str, table: list[str]) -> str:
 
 
 
-_STR_ARRAY_CAST_RE = re.compile(
-    # string-typed operands recognizable from text: a string literal
-    # (mask token, optionally ::JSON-annotated and parenthesized) or a
-    # json_extract call (the dd_ rename happens later in the pipeline)
-    r"\bCAST\s*\(\s*(?:(?:dd_)?json_extract\w*\s*\(|\(?\s*\x00\d+\x00"
-    r"(?:\s*::\s*JSON\b)?\s*\)?\s+AS\b)",
+# A string-typed operand recognizable from text: a string literal (mask
+# token, optionally ::STRING-annotated and parenthesized; JSON and VARCHAR
+# are spelled STRING by then) or a json_extract call (the dd_ rename
+# happens later in the pipeline).
+_STR_OPERAND_RE = re.compile(
+    r"\(?\s*(?:dd_)?json_extract\w*\s*\("
+    r"|\(?\s*\x00\d+\x00(?:\s*::\s*STRING\b)?\s*\)?(?=\s+AS\b|\s*\Z)",
     re.IGNORECASE,
+)
+
+_STR_ARRAY_CAST_RE = re.compile(
+    rf"\bCAST\s*\(\s*(?:{_STR_OPERAND_RE.pattern})", re.IGNORECASE
+)
+
+# a postfix cast to ARRAY<…>, up to three levels of nested <…>
+_DCOLON_ARRAY_RE = re.compile(
+    r"::\s*(ARRAY\s*<(?:[^<>]|<(?:[^<>]|<[^<>]*>)*>)*>)", re.IGNORECASE
 )
 
 
 def _rewrite_string_array_casts(s: str) -> str:
-    """``CAST(<json/string text> AS ARRAY<T>)`` → ``from_json`` (round-15
-    hunt H): DuckDB casts VARCHAR/JSON text to a LIST by parsing the
-    bracket syntax — ``('{"a":[1,2,3]}'::JSON)->'a'`` then ``::INT[]``
-    is the idiomatic extraction chain — while Spark has no STRING→ARRAY
-    cast. Covers the two textually-recognizable string-typed operands:
-    a string literal (mask token) and the dd_json_extract shims; JSON
-    text is valid from_json input by construction. Runs after
+    """``CAST(<json/string text> AS ARRAY<T>)`` and its postfix spelling
+    ``<json/string text>::ARRAY<T>`` → ``from_json`` (round-15 hunt H):
+    DuckDB casts VARCHAR/JSON text to a LIST by parsing the bracket
+    syntax — ``('{"a":[1,2,3]}'::JSON)->'a'`` then ``::INT[]`` is the
+    idiomatic extraction chain — while Spark has no STRING→ARRAY cast.
+    Covers the two textually-recognizable string-typed operands: a
+    string literal (mask token) and the dd_json_extract shims; JSON text
+    is valid from_json input by construction. Runs after
     _rewrite_cast_types (which spells the ARRAY<> target)."""
     pos = 0
     while m := _STR_ARRAY_CAST_RE.search(s, pos):
@@ -605,6 +616,14 @@ def _rewrite_string_array_casts(s: str) -> str:
         repl = f"from_json({operand}, '{am.group(1)}')"
         s = s[: m.start()] + repl + s[cast_close + 1 :]
         pos = m.start() + len(repl)
+    pos = 0
+    while m := _DCOLON_ARRAY_RE.search(s, pos):
+        start, pos = _primary_back(s, m.start()), m.end()
+        operand = s[start : m.start()].strip()
+        if _STR_OPERAND_RE.match(operand):
+            repl = f"from_json({operand}, '{m.group(1)}')"
+            s = s[:start] + repl + s[pos:]
+            pos = start + len(repl)
     return s
 
 

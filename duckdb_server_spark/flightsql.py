@@ -14,7 +14,6 @@ stable) protobuf wire format:
 - ``Any``                  : field 1 ``type_url`` (string), field 2 ``value`` (bytes)
 - ``CommandStatementQuery``: field 1 ``query`` (string)
 - ``CommandGetSqlInfo``    : field 1 repeated ``info`` (uint32)
-- ``TicketStatementQuery`` : field 1 ``statement_handle`` (bytes)
 
 Wire format reference: https://protobuf.dev/programming-guides/encoding/
 (varint keys ``(field_no << 3) | wire_type``; length-delimited = type 2).
@@ -29,7 +28,6 @@ import pyarrow as pa
 TYPE_URL_PREFIX = "type.googleapis.com/arrow.flight.protocol.sql."
 CMD_STATEMENT_QUERY = TYPE_URL_PREFIX + "CommandStatementQuery"
 CMD_GET_SQL_INFO = TYPE_URL_PREFIX + "CommandGetSqlInfo"
-TICKET_STATEMENT_QUERY = TYPE_URL_PREFIX + "TicketStatementQuery"
 CMD_GET_CATALOGS = TYPE_URL_PREFIX + "CommandGetCatalogs"
 CMD_GET_DB_SCHEMAS = TYPE_URL_PREFIX + "CommandGetDbSchemas"
 CMD_GET_TABLES = TYPE_URL_PREFIX + "CommandGetTables"
@@ -186,16 +184,6 @@ def decode_command_get_sql_info(value: bytes) -> list[int]:
                 code, pos = _read_varint(v, pos)
                 out.append(code)
     return out
-
-
-def encode_ticket_statement_query(handle: bytes) -> bytes:
-    return pack_any(TICKET_STATEMENT_QUERY, _field_bytes(1, handle))
-
-
-def decode_ticket_statement_query(value: bytes) -> bytes:
-    fields = parse_fields(value)
-    handles = fields.get(1, [b""])
-    return handles[0] if isinstance(handles[0], bytes) else b""
 
 
 def encode_command_get_catalogs() -> bytes:

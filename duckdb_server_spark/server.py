@@ -11,16 +11,16 @@ Protocol surface (both served):
   speak, reference client/main.go:13-17): ``GetFlightInfo`` unmarshals a
   protobuf ``Any`` wrapping ``CommandStatementQuery`` (main.go:129-139) and
   answers ``CommandGetSqlInfo`` with the standard ``SqlInfo`` dense-union
-  schema (main.go:173-175, 202-223). Tickets are
-  ``Any(TicketStatementQuery)``. Wire codecs: ``flightsql.py``.
+  schema (main.go:173-175, 202-223). Wire codecs: ``flightsql.py``.
 - **Raw tickets** (reference client/main.py:9-11): ticket bytes ARE the SQL.
 
-One command path, like the reference's switch on the command type:
-``SparkFlightServer._command`` decodes every descriptor or ticket once,
-into the SQL to resolve or the finished metadata table (catalogs, schemas,
-tables, keys, type and SqlInfo), and GetFlightInfo, GetSchema and DoGet
-branch once on which it is. Prepared statements live in one bounded map,
-handle → [SQL, bound parameter row].
+The ticket is the command: GetFlightInfo hands back the descriptor's own
+bytes (main.go:153-167). ``SparkFlightServer._command`` decodes every
+descriptor or ticket once, like the reference's switch on the command
+type, into a resolved DataFrame or the finished metadata table (catalogs,
+schemas, tables, keys, type and SqlInfo). Prepared statements live in one
+bounded map, handle → [SQL, bound parameter row, resolved frame]: a handle
+resolves once per execution, and its ticket is valid while it is open.
 
 Spark-first differences (improvements, documented in SURVEY.md §3):
 - ``GetFlightInfo`` resolves the result schema via Catalyst **analysis
@@ -219,7 +219,8 @@ class SparkFlightServer(flight.FlightServerBase):
         self.spark = spark
         self._location = location
         # Prepared statements, oldest first: handle → [SQL text, the
-        # parameter row bound via DoPut or None]. The reference leaves
+        # parameter row bound via DoPut or None, the frame resolved under
+        # that binding for the next DoGet or None]. The reference leaves
         # DoAction Unimplemented (main.go:121-124); ADBC FlightSQL drivers
         # route *every* statement through CreatePreparedStatement, so
         # implementing the pair is what makes off-the-shelf clients work.
@@ -231,42 +232,28 @@ class SparkFlightServer(flight.FlightServerBase):
     _CATALOG_NAME = "spark_catalog"
     _DB_SCHEMA_NAME = "default"
 
-    def _command(self, raw: bytes) -> str | pa.Table:
-        """Decode descriptor/ticket bytes into the SQL to resolve, or into
-        the finished Flight SQL metadata table (cheap to build)."""
+    def _command(self, raw: bytes, take: bool = False) -> DataFrame | pa.Table:
+        """Decode descriptor/ticket bytes into the resolved statement, or
+        into the finished Flight SQL metadata table (cheap to build).
+        ``take`` (DoGet) releases a prepared handle's held frame."""
         unpacked = flightsql.unpack_any(raw)
         if unpacked is None:
             try:
-                return raw.decode("utf-8")
+                sql = raw.decode("utf-8")
             except UnicodeDecodeError:
                 raise flight.FlightServerError(
                     "ticket is neither Flight SQL protobuf nor UTF-8 SQL"
                 ) from None
+            return resolve_query_frame(self.spark, sql)
         type_url, value = unpacked
         if type_url == flightsql.CMD_STATEMENT_QUERY:
-            return flightsql.decode_command_statement_query(value)
-        if type_url == flightsql.TICKET_STATEMENT_QUERY:
-            try:
-                return flightsql.decode_ticket_statement_query(value).decode("utf-8")
-            except UnicodeDecodeError:
-                raise flight.FlightServerError(
-                    "statement handle is not UTF-8 SQL"
-                ) from None
+            return resolve_query_frame(
+                self.spark, flightsql.decode_command_statement_query(value)
+            )
         if type_url == flightsql.CMD_PREPARED_STATEMENT_QUERY:
-            handle = flightsql.decode_prepared_statement_handle(value)
-            with self._prepared_lock:
-                statement = self._prepared.get(handle)
-                if statement is None:
-                    raise flight.FlightServerError(
-                        f"unknown prepared statement handle {handle!r}"
-                    )
-                sql, params = statement
-            if params is None:
-                return sql
-            try:
-                return dialect.bind_parameters(sql, params)
-            except ValueError as exc:
-                raise flight.FlightServerError(str(exc)) from exc
+            return self._prepared_frame(
+                flightsql.decode_prepared_statement_handle(value), take
+            )
         if type_url == flightsql.CMD_GET_SQL_INFO:
             return flightsql.sql_info_table(flightsql.decode_command_get_sql_info(value))
         if type_url == flightsql.CMD_GET_CATALOGS:
@@ -335,29 +322,51 @@ class SparkFlightServer(flight.FlightServerBase):
             schema = flightsql.GET_TABLES_SCHEMA_WITH_SCHEMA
         return pa.Table.from_arrays(arrays, schema=schema)
 
-    def _schema(self, command: str | pa.Table) -> pa.Schema:
-        """The result schema: a metadata table's own, or the statement's
-        through gated Catalyst analysis only (vs the reference's full
+    def _prepared_frame(self, handle: bytes, take: bool) -> DataFrame:
+        """The handle's frame under its current binding, resolved once per
+        execution: held from CreatePreparedStatement or GetFlightInfo until
+        DoGet takes it or DoPut rebinds the handle. DoGet takes it because
+        a frame keeps its optimized plan: a reused one would repeat now()
+        and the other per-statement values, which DuckDB evaluates per
+        execution."""
+        with self._prepared_lock:
+            statement = self._prepared.get(handle)
+            if statement is None:
+                raise flight.FlightServerError(
+                    f"unknown prepared statement handle {handle!r}"
+                )
+            sql, params, frame = statement
+            if take:
+                statement[2] = None
+        if frame is not None:
+            return frame
+        if params is not None:
+            try:
+                sql = dialect.bind_parameters(sql, params)
+            except ValueError as exc:
+                raise flight.FlightServerError(str(exc)) from exc
+        frame = resolve_query_frame(self.spark, sql)
+        with self._prepared_lock:
+            if not take and statement[1] is params:  # not rebound meanwhile
+                statement[2] = frame
+        return frame
+
+    def _schema(self, command: DataFrame | pa.Table) -> pa.Schema:
+        """The result schema: a metadata table's own, or the resolved
+        statement's from Catalyst analysis only (vs the reference's full
         double execution, main.go:144-148); routed statement forms may run
         their inherent discovery job (dynamic PIVOT's distinct)."""
         if isinstance(command, pa.Table):
             return command.schema
-        return _arrow_schema(resolve_query_frame(self.spark, command))
+        return _arrow_schema(command)
 
     # -- entry point 2: schema probe (main.go:126-194) ----------------------
     def get_flight_info(self, context, descriptor):
-        command = self._command(descriptor.command)
-        schema = self._schema(command)
-        if isinstance(command, pa.Table):
-            ticket = flight.Ticket(descriptor.command)
-        else:
-            # The ticket carries the statement; DoGet re-resolves
-            # deterministically (file-read views and pivots are cached by
-            # digest).
-            ticket = flight.Ticket(
-                flightsql.encode_ticket_statement_query(command.encode("utf-8"))
-            )
-        endpoint = flight.FlightEndpoint(ticket, [self._location])
+        schema = self._schema(self._command(descriptor.command))
+        # The ticket is the command (main.go:153-167).
+        endpoint = flight.FlightEndpoint(
+            flight.Ticket(descriptor.command), [self._location]
+        )
         # Unknown cardinality: -1 records / -1 bytes, like the reference
         # (main.go:164-165).
         return flight.FlightInfo(schema, descriptor, [endpoint], -1, -1)
@@ -368,12 +377,11 @@ class SparkFlightServer(flight.FlightServerBase):
 
     # -- entry point 1: execute + stream (main.go:196-250) ------------------
     def do_get(self, context, ticket):
-        command = self._command(ticket.ticket)
+        command = self._command(ticket.ticket, take=True)
         if isinstance(command, pa.Table):
             return flight.RecordBatchStream(command)
-        df = resolve_query_frame(self.spark, command)
-        schema = _arrow_schema(df)
-        return flight.GeneratorStream(schema, iter_arrow_batches(df, schema))
+        schema = _arrow_schema(command)
+        return flight.GeneratorStream(schema, iter_arrow_batches(command, schema))
 
     # -- DoAction: prepared statements (beyond the reference, which leaves
     # DoAction Unimplemented, main.go:121-124). ADBC FlightSQL drivers
@@ -394,17 +402,19 @@ class SparkFlightServer(flight.FlightServerBase):
                 # discover it from the first result stream. The bound form
                 # is re-gated + analyzed at execution.
                 assert_query_shaped(self.spark, dialect.neutralize_parameters(sql))
-                schema = pa.schema([])
+                frame, schema = None, pa.schema([])
             else:
                 # Gate + analyze now: a bad statement fails at prepare
                 # time (the contract ADBC relies on), and the dataset
                 # schema rides back in the result so clients can bind
                 # without a round trip. Full dialect surface — DESCRIBE /
-                # SUMMARIZE / read_parquet prepare fine.
-                schema = self._schema(sql)
+                # SUMMARIZE / read_parquet prepare fine. The handle keeps
+                # the frame for its GetFlightInfo and DoGet.
+                frame = resolve_query_frame(self.spark, sql)
+                schema = _arrow_schema(frame)
             with self._prepared_lock:
                 handle = b"dss-ps-%d" % next(self._handles)
-                self._prepared[handle] = [sql, None]
+                self._prepared[handle] = [sql, None, frame]
                 while len(self._prepared) > MAX_PREPARED_STATEMENTS:
                     self._prepared.popitem(last=False)
             yield flight.Result(
@@ -446,7 +456,7 @@ class SparkFlightServer(flight.FlightServerBase):
                 raise flight.FlightServerError(
                     f"unknown prepared statement handle {handle!r}"
                 )
-            statement[1] = row
+            statement[1:] = [row, None]
 
     def list_actions(self, context):
         return [

@@ -105,7 +105,8 @@ def test_cli_server_rounds_doubles_like_duckdb(cli_port, warehouse):
     # 6th decimal, where Spark's HALF_UP disagrees with DuckDB's rounding.
     # DuckDB divides the whole product (l_extendedprice * l_discount) / 1000.
     # The casts spell their targets with DuckDB-only type names: bare
-    # DECIMAL is DECIMAL(18,3) and truncates, a DOUBLE source rounds.
+    # DECIMAL is DECIMAL(18,3) and truncates, a DOUBLE source rounds;
+    # text parses to a list, and JSON is the value's text, kept verbatim.
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW lineitem AS SELECT * FROM "
@@ -124,6 +125,10 @@ def test_cli_server_rounds_doubles_like_duckdb(cli_port, warehouse):
         "SELECT 3.7::FLOAT8::INT8 AS v",
         "SELECT CAST({'a': 1, 'b': {'c': 'x'}} "
         "AS STRUCT(a INT, b STRUCT(c VARCHAR))) AS v",
+        "SELECT '[1,2]'::INT[] AS v",
+        "SELECT CAST(42 AS JSON) AS v",
+        "SELECT 42::JSON AS v",
+        """SELECT '{"a":  1}'::JSON AS v""",
     ]:
         if sql in rounded:
             assert "dd_libm_round" in rewrite(sql, duckdb_first=True)

@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+import sys
+import threading
+
 import pyarrow as pa
 import pyarrow.flight as flight
 import pytest
@@ -236,7 +239,7 @@ def test_prepared_statements_capped(spark, flight_port, monkeypatch):
             writer.close()
         assert len(server._prepared) == cap
         assert list(server._prepared) == handles[-cap:]
-        assert [row for _sql, row in server._prepared.values()] == [
+        assert [entry[1] for entry in server._prepared.values()] == [
             [i] for i in range(10, cap + 10)
         ]
         evicted = flightsql.encode_command_prepared_statement_query(handles[0])
@@ -248,6 +251,110 @@ def test_prepared_statements_capped(spark, flight_port, monkeypatch):
     finally:
         client.close()
         server.shutdown()
+
+
+def _prepare(client, sql):
+    """CreatePreparedStatement → the handle's CommandPreparedStatementQuery
+    descriptor."""
+    result = list(client.do_action(flight.Action(
+        flightsql.CREATE_PREPARED_STATEMENT,
+        flightsql.encode_action_create_prepared_request(sql),
+    )))
+    handle = flightsql.decode_action_create_prepared_result(
+        result[0].body.to_pybytes())[0]
+    return flight.FlightDescriptor.for_command(
+        flightsql.encode_command_prepared_statement_query(handle)
+    )
+
+
+def _bind(client, descriptor, value):
+    batch = pa.record_batch([pa.array([value])], names=["p1"])
+    writer, _ = client.do_put(descriptor, batch.schema)
+    writer.write_batch(batch)
+    writer.close()
+
+
+def _execute(client, descriptor):
+    info = client.get_flight_info(descriptor)
+    return client.do_get(info.endpoints[0].ticket).read_all()
+
+
+def test_prepared_handle_resolves_once_per_execution(flight_port, monkeypatch):
+    """A prepared handle holds the frame it resolved (at prepare time, or
+    at GetFlightInfo after a DoPut) for the DoGet that follows, so each
+    execution resolves once; a statement query's ticket is the statement
+    itself and resolves on each leg."""
+    calls = []
+    resolve = srv.resolve_query_frame
+
+    def counting_resolve(spark, sql):
+        calls.append(sql)
+        return resolve(spark, sql)
+
+    monkeypatch.setattr(srv, "resolve_query_frame", counting_resolve)
+
+    def resolves(run):
+        calls.clear()
+        run()
+        return len(calls)
+
+    assert resolves(lambda: srv.query_prepared(flight_port, "SELECT 1 AS a")) == 1
+    assert resolves(lambda: srv.query_prepared(flight_port, "SELECT ? AS a", [7])) == 1
+    assert resolves(lambda: srv.query_flightsql(flight_port, "SELECT 1 AS a")) == 2
+
+    with flight.connect(f"grpc://127.0.0.1:{flight_port}") as client:
+        descriptor = _prepare(client, "SELECT ? AS v")
+        calls.clear()
+        for value in (1, 2):
+            _bind(client, descriptor, value)
+            assert client.get_schema(descriptor).schema.names == ["v"]
+            assert _execute(client, descriptor)["v"].to_pylist() == [value]
+        assert len(calls) == 2
+        # DoGet takes the held frame: a second execution resolves afresh,
+        # so now() moves between executions, as in DuckDB.
+        calls.clear()
+        descriptor = _prepare(client, "SELECT now() AS t")
+        first, second = (_execute(client, descriptor)["t"][0] for _ in range(2))
+        assert first != second and len(calls) == 2
+
+
+def test_prepared_rebind_never_keeps_a_stale_frame(flight_port):
+    """Readers execute one handle while a writer rebinds it: a frame
+    resolved under a binding that DoPut replaced meanwhile is not kept,
+    so the writer's own execution after each binding answers it."""
+    last = 30
+    done = threading.Event()
+    errors = []
+    url = f"grpc://127.0.0.1:{flight_port}"
+    with flight.connect(url) as client:
+        descriptor = _prepare(client, "SELECT ? AS v")
+        _bind(client, descriptor, 1)
+
+        def read():
+            try:
+                with flight.connect(url) as reader:
+                    while not done.is_set():
+                        value = _execute(reader, descriptor)["v"][0].as_py()
+                        assert 1 <= value <= last
+            except Exception as exc:  # reported by the assert below
+                errors.append(exc)
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        readers = [threading.Thread(target=read) for _ in range(6)]
+        try:
+            for thread in readers:
+                thread.start()
+            for value in range(2, last + 1):
+                _bind(client, descriptor, value)
+                assert _execute(client, descriptor)["v"].to_pylist() == [value]
+        finally:
+            done.set()
+            for thread in readers:
+                thread.join(timeout=120)
+            sys.setswitchinterval(interval)
+        assert not any(thread.is_alive() for thread in readers)
+        assert errors == []
 
 
 def test_engine_error_surfaces(flight_port):
