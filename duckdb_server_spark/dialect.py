@@ -84,6 +84,7 @@ import threading
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from duckdb_server_spark.dialect_rewrites.core import (  # noqa: F401
@@ -196,6 +197,7 @@ from duckdb_server_spark.dialect_rewrites.nested import (  # noqa: F401
     _rewrite_string_array_casts,
     _rewrite_in_subquery_3vl,
     _rewrite_nested_comparisons,
+    json_list_casts,
 )
 from duckdb_server_spark.dialect_rewrites.statements import (  # noqa: F401
     _EXECUTE_RE,
@@ -969,7 +971,15 @@ def run_sql(spark: SparkSession, sql: str) -> DataFrame:
             )
             return spark.createDataFrame([(key, plan)], schema)
         try:
-            df = spark.sql(rewrite(sql, spark, duckdb_first=True))
+            text = rewrite(sql, spark, duckdb_first=True)
+            try:
+                df = spark.sql(text)
+            except AnalysisException as exc:
+                # a string column's list cast: only the analyzer knows
+                # the operand's type, so retry what it rejects once
+                if (text := json_list_casts(text, exc)) is None:
+                    raise
+                df = spark.sql(text)
             df.schema
             return df
         except DialectError:

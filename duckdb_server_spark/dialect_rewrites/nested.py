@@ -8,6 +8,7 @@ import threading
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from duckdb_server_spark.dialect_rewrites.core import (  # noqa: F401
@@ -625,6 +626,30 @@ def _rewrite_string_array_casts(s: str) -> str:
             s = s[:start] + repl + s[pos:]
             pos = start + len(repl)
     return s
+
+
+_STRING_TO_ARRAY_RE = re.compile(r'cannot cast "STRING" to "ARRAY<')
+
+
+def json_list_casts(sql: str, exc: AnalysisException) -> str | None:
+    """``sql`` with the list cast that the analyzer rejected in ``exc`` as
+    STRING → ARRAY routed through ``from_json`` (every occurrence of its
+    text), or None for any other error. A string
+    column's cast (``c::INT[]``) looks like a list column's in the text;
+    only analysis tells them apart, so a list column's cast stays a cast.
+    """
+    if not _STRING_TO_ARRAY_RE.search(str(exc)):
+        return None
+    for context in exc.getQueryContext():
+        cast = context.fragment()
+        if m := re.fullmatch(r"(?is)(?:TRY_)?CAST\s*\((.*)\s+AS\s+(ARRAY\s*<.*>)\s*\)", cast):
+            json = f"from_json({m.group(1)}, '{m.group(2)}')"
+        elif (m := _DCOLON_ARRAY_RE.search(cast)) and m.end() == len(cast):
+            json = f"from_json({cast[: m.start()]}, '{m.group(1)}')"
+        else:
+            continue
+        return sql.replace(cast, json)
+    return None
 
 
 

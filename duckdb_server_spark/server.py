@@ -31,6 +31,16 @@ Spark-first differences (improvements, documented in SURVEY.md §3):
   Python worker), forwarded as bounded zero-copy slices. Unlike the
   reference's pipelined loop (main.go:241-243), the driver holds one whole
   result per in-flight DoGet and sends the first batch once it is collected.
+- The warehouse is served from memory (``main``), as the reference's one
+  DuckDB keeps the pages it has read in its buffer manager (main.go:44-70).
+  Scans use Spark's default 128 MB splits (``SERVING_CONFIGS``), one task
+  per core for a small file, not the operator catalog's 512 KB. Each
+  warehouse view is persisted in Spark's in-memory columnar store
+  (``session.cache_views``, MEMORY_ONLY): tables are admitted smallest
+  first while 4 × their parquet bytes fit in half of the driver's on-heap
+  storage memory, and a larger one stays on parquet. The first query on a
+  table builds its cache; later ones read cached batches and skip those
+  whose min/max statistics rule their filter out.
 
 Read-only serving, enforced at one chokepoint: while a request resolves
 (``read_only_scope``), every ``SparkSession.sql`` on that thread is gated
@@ -69,6 +79,11 @@ BATCH_ROWS = 8192
 # Open prepared-statement handles per server; past it the oldest is
 # evicted, bounding a client that never sends ClosePreparedStatement.
 MAX_PREPARED_STATEMENTS = 1024
+
+# The serving session scans with Spark's default 128 MB splits rather than
+# the operator catalog's 512 KB (session.default_configs): a lookup's job
+# then has one task per core, not one per 512 KB of parquet.
+SERVING_CONFIGS = {"spark.sql.files.maxPartitionBytes": str(128 << 20)}
 
 # Read-only command prefixes allowed through the statement gate.
 _READONLY_COMMAND_PREFIXES = ("Explain", "Show", "Describe")
@@ -610,10 +625,13 @@ def main(argv: list[str] | None = None) -> None:
     parser.add_argument("--port", type=int, default=32010)
     args = parser.parse_args(argv)
 
-    spark = session.get_spark(app_name="dss-server")
+    spark = session.get_spark(app_name="dss-server", configs=SERVING_CONFIGS)
     statements = [s.strip() for s in args.init.split(";") if s.strip()]
     # The same session path as Engine: function surface, views, init SQL.
-    session.bootstrap(spark, args.warehouse, init_sql=statements)
+    views = session.bootstrap(spark, args.warehouse, init_sql=statements)
+    # The in-memory tier gets half of the driver's storage memory.
+    storage = spark.sparkContext._jsc.sc().env().memoryManager()
+    session.cache_views(views, args.warehouse, storage.maxOnHeapStorageMemory() // 2)
     server = SparkFlightServer(spark, f"grpc://0.0.0.0:{args.port}")
     print(f"serving warehouse={args.warehouse} port={server.port}", flush=True)
     server.serve()

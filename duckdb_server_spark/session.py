@@ -20,6 +20,7 @@ import os
 from collections.abc import Iterable
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from duckdb_server_spark import flightsql
@@ -87,12 +88,16 @@ def default_configs(shuffle_partitions: int | None = None) -> dict[str, str]:
         # TIMESTAMP_LTZ is value-identical and keeps every parquet flavor
         # (ns-as-long, µs, ms) on one timestamp type.
         "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-        # Scan split size. The test corpus is ~10 MB/table, which at
-        # Spark's 128m default packs into ≤3 tasks — 3 of 32 cores busy.
-        # 512k splits the same files into ~20 tasks (measured: window agg
-        # 1.9×, percentile 1.4× faster at sf0.1). On a real cluster set
-        # SPARK_GRAFT_MAX_PARTITION_BYTES back to ≥128m — at 100 TB small
-        # splits mean tens of millions of tasks.
+        # Scan split size for Engine and the operator catalog. The test
+        # corpus is ~10 MB/table, which at Spark's 128m default packs into
+        # ≤3 tasks — 3 of 32 cores busy. 512k splits the same files into
+        # ~20 tasks (measured: window agg 1.9×, percentile 1.4× faster at
+        # sf0.1). On a real cluster set SPARK_GRAFT_MAX_PARTITION_BYTES
+        # back to ≥128m — at 100 TB small splits mean tens of millions of
+        # tasks. The Flight server ignores it and scans with Spark's 128m
+        # default (server.SERVING_CONFIGS): every corpus table is one
+        # parquet row group, and a smaller split only adds tasks that read
+        # nothing.
         "spark.sql.files.maxPartitionBytes": os.environ.get(
             "SPARK_GRAFT_MAX_PARTITION_BYTES", "524288"
         ),
@@ -235,6 +240,28 @@ def register_views(
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+def cache_views(
+    views: dict[str, DataFrame], sf_dir: str, budget_bytes: int
+) -> list[str]:
+    """The serving tier: persist warehouse views in Spark's in-memory
+    columnar store (MEMORY_ONLY, so the warehouse is never copied to local
+    disk; an evicted block is recomputed from parquet). Lazy: the first
+    query on a table builds its cache, later ones read cached batches and
+    skip those whose min/max statistics rule the filter out. Tables are
+    admitted smallest first while 4 × their parquet bytes (columnar
+    batches measured 1.7× the parquet) still fit in ``budget_bytes``; a
+    larger table stays on parquet. Returns the admitted names."""
+    size = {name: os.path.getsize(table_path(sf_dir, name)) for name in views}
+    admitted: list[str] = []
+    for name in sorted(views, key=size.__getitem__):
+        budget_bytes -= 4 * size[name]
+        if budget_bytes < 0:
+            break
+        views[name].persist(StorageLevel.MEMORY_ONLY)
+        admitted.append(name)
+    return admitted
 
 
 def run_init_sql(spark: SparkSession, statements: Iterable[str]) -> None:

@@ -13,13 +13,16 @@ import subprocess
 import sys
 import threading
 import time
+from unittest import mock
 
 import duckdb
 import pyarrow.flight as flight
 import pytest
+from pyspark import StorageLevel
 
 from duckdb_server_spark import flightsql
 from duckdb_server_spark import server as srv
+from duckdb_server_spark import session
 from duckdb_server_spark.dialect import rewrite
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -106,7 +109,8 @@ def test_cli_server_rounds_doubles_like_duckdb(cli_port, warehouse):
     # DuckDB divides the whole product (l_extendedprice * l_discount) / 1000.
     # The casts spell their targets with DuckDB-only type names: bare
     # DECIMAL is DECIMAL(18,3) and truncates, a DOUBLE source rounds;
-    # text parses to a list, and JSON is the value's text, kept verbatim.
+    # text parses to a list (a string column's too, while a list column's
+    # cast stays a cast), and JSON is the value's text, kept verbatim.
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW lineitem AS SELECT * FROM "
@@ -126,6 +130,9 @@ def test_cli_server_rounds_doubles_like_duckdb(cli_port, warehouse):
         "SELECT CAST({'a': 1, 'b': {'c': 'x'}} "
         "AS STRUCT(a INT, b STRUCT(c VARCHAR))) AS v",
         "SELECT '[1,2]'::INT[] AS v",
+        "SELECT c::INT[] AS v FROM (SELECT '[1,2]' AS c)",
+        "SELECT CAST(c AS INT[]) AS v FROM (SELECT '[1,2]' AS c)",
+        "SELECT CAST(l AS BIGINT[]) AS v FROM (SELECT [1, 2] AS l)",
         "SELECT CAST(42 AS JSON) AS v",
         "SELECT 42::JSON AS v",
         """SELECT '{"a":  1}'::JSON AS v""",
@@ -135,6 +142,30 @@ def test_cli_server_rounds_doubles_like_duckdb(cli_port, warehouse):
         expected = con.execute(sql).fetchall()
         got = srv.query_flightsql(cli_port, sql).to_pylist()
         assert [tuple(r.values()) for r in got] == expected, sql
+
+
+def test_cli_server_serves_warehouse_from_memory(cli_port):
+    # Every view is persisted in memory: the first query on lineitem
+    # builds its cache, and a lookup's plan scans it, not the parquet file.
+    srv.query_flightsql(cli_port, "SELECT count(*) AS n FROM lineitem")
+    plan = srv.query_flightsql(
+        cli_port, "EXPLAIN SELECT * FROM lineitem WHERE l_orderkey = 1"
+    ).column("explain_value")[0].as_py()
+    assert "InMemoryTableScan" in plan
+
+
+def test_cache_views_admits_smallest_tables_within_budget(warehouse):
+    views = {name: mock.Mock() for name in session.TABLES}
+    size = {name: os.path.getsize(session.table_path(warehouse, name)) for name in views}
+    assert max(size, key=size.get) == "lineitem"
+    rest = [name for name in views if name != "lineitem"]
+    # Room for 4 × every other table, not for lineitem's share as well.
+    budget = 4 * sum(size[name] for name in rest)
+    admitted = session.cache_views(views, warehouse, budget)
+    assert admitted == sorted(rest, key=size.get)
+    for name in rest:
+        views[name].persist.assert_called_once_with(StorageLevel.MEMORY_ONLY)
+    views["lineitem"].persist.assert_not_called()
 
 
 @pytest.mark.parametrize(
