@@ -202,7 +202,6 @@ from duckdb_server_spark.dialect_rewrites.nested import (  # noqa: F401
 from duckdb_server_spark.dialect_rewrites.statements import (  # noqa: F401
     _EXECUTE_RE,
     _FILE_READ_HINT_RE,
-    _PIVOT_CACHE_CAP,
     _PIVOT_RE,
     _SEQVAL_HINT_RE,
     _TEMP_VIEW_CAP,
@@ -892,17 +891,7 @@ def run_sql(spark: SparkSession, sql: str) -> DataFrame:
     if m := _SHOW_TABLE_RE.match(sql):
         return describe_frame(spark, spark.table(m.group(1)))
     if m := _PIVOT_RE.match(sql):
-        state = dialect_state(spark)
-        key = " ".join(sql.split())
-        with state.lru_lock:  # r15: concurrent serving threads share
-            df = state.pivot_cache.pop(key, None)  # this LRU
-        if df is None:
-            df = _run_pivot(spark, m)
-        with state.lru_lock:
-            state.pivot_cache[key] = df  # reinsert = most-recently-used
-            while len(state.pivot_cache) > _PIVOT_CACHE_CAP:
-                state.pivot_cache.pop(next(iter(state.pivot_cache)))
-        return df
+        return _run_pivot(spark, m)
     if m := _UNPIVOT_RE.match(sql):
         # DuckDB `UNPIVOT t ON c1, c2 INTO NAME k VALUE v` → Spark's
         # native UNPIVOT clause (same semantics, different spelling).

@@ -45,12 +45,6 @@ class DialectState:
     secrets: dict[str, dict[str, str]] = field(default_factory=dict)
     macros: dict[str, "Macro"] = field(default_factory=dict)
     prepared: dict[str, str] = field(default_factory=dict)
-    # statement-digest → built DataFrame for dynamic PIVOT: the eager
-    # value-discovery distinct runs once per distinct statement, not once
-    # per GetFlightInfo/GetSchema/DoGet leg. LRU-bounded (insertion order
-    # = recency) and cleared on every write route so cached pivot columns
-    # can never go stale after an init-phase INSERT/COPY FROM.
-    pivot_cache: dict[str, DataFrame] = field(default_factory=dict)
     # __dd_read_* / __dd_ubn_* / __dd_pivot_* temp views registered from
     # wire input, LRU-ordered; oldest are dropped past _TEMP_VIEW_CAP so
     # server-lifetime catalog state stays bounded under arbitrary clients
@@ -87,9 +81,6 @@ class DialectState:
     # use pays one uncontended acquire
     lru_lock: threading.RLock = field(default_factory=threading.RLock)
 
-
-
-_PIVOT_CACHE_CAP = 32
 
 _TEMP_VIEW_CAP = 64
 
@@ -913,10 +904,7 @@ def _apply_setting(state: DialectState, name: str, value: str) -> None:
     form). r16 (ADVICE r15 item 3): ``duckdb_version_semantics`` is
     validated HERE — the SET statement itself errors on a non-version
     value, like DuckDB's typed settings, instead of deferring the
-    DialectError to whatever query happens to run next — and flipping
-    it invalidates state.pivot_cache: a cached PIVOT DataFrame built
-    under the old semantics (map[key] / division lowering baked into
-    its plan) must not be served under the new ones."""
+    DialectError to whatever query happens to run next."""
     if name == "duckdb_version_semantics":
         try:
             tuple(int(x) for x in value.split(".")[:2])
@@ -925,8 +913,6 @@ def _apply_setting(state: DialectState, name: str, value: str) -> None:
                 f"SET duckdb_version_semantics: {value!r} is not a "
                 "DuckDB version (expected e.g. '1.0' or '1.4')"
             ) from None
-        if state.settings.get(name, "1.0") != value:
-            state.pivot_cache.clear()
     state.settings[name] = value
 
 
@@ -1190,7 +1176,6 @@ def execute_statement(spark: SparkSession, stmt: str) -> DataFrame | None:
             state.comments = state.txn_ddl_undo["comments"]
         state.txn_undo = None
         state.txn_ddl_undo = None
-        state.pivot_cache.clear()
         return None
     if m := _SET_RE.match(stmt):
         _apply_setting(state, m.group(1).lower(), _strip_quotes(m.group(2)))
@@ -1246,7 +1231,6 @@ def execute_statement(spark: SparkSession, stmt: str) -> DataFrame | None:
     if m := _COPY_FROM_RE.match(stmt):
         _txn_record(spark, state, m.group(1))
         _run_copy_from(spark, m)
-        state.pivot_cache.clear()  # cached pivot columns may be stale now
         return None
     if (m := _MACRO_RE.match(stmt)) and _register_macro(state, stmt, m):
         return None
@@ -1269,12 +1253,10 @@ def execute_statement(spark: SparkSession, stmt: str) -> DataFrame | None:
         from duckdb_server_spark import ddl
 
         ddl.forget_table(state, m.group(2))
-        state.pivot_cache.clear()
         return None
     if m := _INSERT_RE.match(stmt):
         _txn_record(spark, state, m.group(2))
         df = _run_insert(spark, m)
-        state.pivot_cache.clear()  # cached pivot columns may be stale now
         return df
     if m := _CREATE_SEQ_RE.match(stmt):
         from duckdb_server_spark import ddl
@@ -1349,21 +1331,17 @@ def execute_statement(spark: SparkSession, stmt: str) -> DataFrame | None:
             if clauses.get("RETURNING")
             else None,
         )
-        state.pivot_cache.clear()
         return df
     if m := _TRUNCATE_RE.match(stmt):
         _txn_record(spark, state, m.group(1))
         df = _run_delete(spark, m.group(1), None)
-        state.pivot_cache.clear()
         return df
     if m := _UPDATE_RE.match(stmt):
         _txn_record(spark, state, m.group(1))
         df = _run_update(spark, m)
-        state.pivot_cache.clear()
         return df
     if m := _ALTER_RE.match(stmt):
         _run_alter(spark, state, m)
-        state.pivot_cache.clear()
         return None
     if m := _CREATE_INDEX_RE.match(stmt):
         # an index is a performance hint here — results never depend on
@@ -1387,7 +1365,6 @@ def execute_statement(spark: SparkSession, stmt: str) -> DataFrame | None:
         return None
     if m := _IMPORT_DB_RE.match(stmt):
         _run_import_db(spark, m.group(1))
-        state.pivot_cache.clear()
         return None
     if m := _PREPARE_RE.match(stmt):
         state.prepared[m.group(1).lower()] = m.group(2)
@@ -1406,7 +1383,6 @@ def execute_statement(spark: SparkSession, stmt: str) -> DataFrame | None:
         _txn_record(spark, state, name)
         df = _run_sql_late(spark, body)
         df.createOrReplaceTempView(name.split(".")[-1])
-        state.pivot_cache.clear()
         return None
     if m := _TABLE_DDL_RE.match(stmt):
         from duckdb_server_spark import ddl
@@ -1420,7 +1396,6 @@ def execute_statement(spark: SparkSession, stmt: str) -> DataFrame | None:
             or_replace=bool(m.group(1)),
             if_not_exists=bool(m.group(2)),
         )
-        state.pivot_cache.clear()
         return None
     if m := _TABLE_AS_RE.match(stmt):
         # CREATE TABLE AS during init: materialize the query once
@@ -1433,7 +1408,6 @@ def execute_statement(spark: SparkSession, stmt: str) -> DataFrame | None:
         _txn_record(spark, state, name)
         df = _materialize(spark, _run_sql_late(spark, body))
         df.createOrReplaceTempView(name.split(".")[-1])
-        state.pivot_cache.clear()
         return None
     return _run_sql_late(spark, stmt)
 

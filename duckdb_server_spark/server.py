@@ -18,15 +18,18 @@ The ticket is the command: GetFlightInfo hands back the descriptor's own
 bytes (main.go:153-167). ``SparkFlightServer._command`` decodes every
 descriptor or ticket once, like the reference's switch on the command
 type, into a resolved DataFrame or the finished metadata table (catalogs,
-schemas, tables, keys, type and SqlInfo). Prepared statements live in one
-bounded map, handle → [SQL, bound parameter row, resolved frame]: a handle
-resolves once per execution, and its ticket is valid while it is open.
+schemas, tables, keys, type and SqlInfo). A statement resolves once per
+request: a schema probe holds its frame in one bounded map keyed by the
+ticket bytes, and DoGet takes it (a miss resolves afresh). Prepared
+statements live in one bounded map, handle → [SQL, bound parameter row];
+a prepared ticket is valid while its handle is open.
 
 Spark-first differences (improvements, documented in SURVEY.md §3):
 - ``GetFlightInfo`` resolves the result schema via Catalyst **analysis
   only** (``spark.sql(q).schema`` — parse → analyze, no job). The
   reference executes the full query just to read the schema and then
-  discards the result (main.go:142-148), doubling every two-step query.
+  discards the result (main.go:142-148), doubling every two-step query;
+  here the frame the probe resolves is the one DoGet runs.
 - Results transfer in **one Spark job** (``toArrow``: JVM-side Arrow, no
   Python worker), forwarded as bounded zero-copy slices. Unlike the
   reference's pipelined loop (main.go:241-243), the driver holds one whole
@@ -76,8 +79,9 @@ from duckdb_server_spark import dialect, flightsql
 # DuckDB produces; we re-chunk to a bounded size).
 BATCH_ROWS = 8192
 
-# Open prepared-statement handles per server; past it the oldest is
-# evicted, bounding a client that never sends ClosePreparedStatement.
+# Open prepared-statement handles, and frames held for a DoGet, per
+# server; past it the oldest is evicted, bounding a client that never
+# sends ClosePreparedStatement or never fetches its ticket.
 MAX_PREPARED_STATEMENTS = 1024
 
 # The serving session scans with Spark's default 128 MB splits rather than
@@ -234,12 +238,14 @@ class SparkFlightServer(flight.FlightServerBase):
         self.spark = spark
         self._location = location
         # Prepared statements, oldest first: handle → [SQL text, the
-        # parameter row bound via DoPut or None, the frame resolved under
-        # that binding for the next DoGet or None]. The reference leaves
+        # parameter row bound via DoPut or None]. The reference leaves
         # DoAction Unimplemented (main.go:121-124); ADBC FlightSQL drivers
         # route *every* statement through CreatePreparedStatement, so
         # implementing the pair is what makes off-the-shelf clients work.
         self._prepared: OrderedDict[bytes, list] = OrderedDict()
+        # Frames resolved for the next DoGet, oldest first: ticket bytes →
+        # (frame, the parameter row it was bound under or None).
+        self._held: OrderedDict[bytes, tuple] = OrderedDict()
         self._prepared_lock = threading.Lock()
         self._handles = itertools.count(1)
 
@@ -250,7 +256,7 @@ class SparkFlightServer(flight.FlightServerBase):
     def _command(self, raw: bytes, take: bool = False) -> DataFrame | pa.Table:
         """Decode descriptor/ticket bytes into the resolved statement, or
         into the finished Flight SQL metadata table (cheap to build).
-        ``take`` (DoGet) releases a prepared handle's held frame."""
+        ``take`` (DoGet) releases the statement's held frame."""
         unpacked = flightsql.unpack_any(raw)
         if unpacked is None:
             try:
@@ -259,15 +265,15 @@ class SparkFlightServer(flight.FlightServerBase):
                 raise flight.FlightServerError(
                     "ticket is neither Flight SQL protobuf nor UTF-8 SQL"
                 ) from None
-            return resolve_query_frame(self.spark, sql)
+            return self._frame(raw, take, sql=sql)
         type_url, value = unpacked
         if type_url == flightsql.CMD_STATEMENT_QUERY:
-            return resolve_query_frame(
-                self.spark, flightsql.decode_command_statement_query(value)
+            return self._frame(
+                raw, take, sql=flightsql.decode_command_statement_query(value)
             )
         if type_url == flightsql.CMD_PREPARED_STATEMENT_QUERY:
-            return self._prepared_frame(
-                flightsql.decode_prepared_statement_handle(value), take
+            return self._frame(
+                raw, take, handle=flightsql.decode_prepared_statement_handle(value)
             )
         if type_url == flightsql.CMD_GET_SQL_INFO:
             return flightsql.sql_info_table(flightsql.decode_command_get_sql_info(value))
@@ -337,34 +343,45 @@ class SparkFlightServer(flight.FlightServerBase):
             schema = flightsql.GET_TABLES_SCHEMA_WITH_SCHEMA
         return pa.Table.from_arrays(arrays, schema=schema)
 
-    def _prepared_frame(self, handle: bytes, take: bool) -> DataFrame:
-        """The handle's frame under its current binding, resolved once per
-        execution: held from CreatePreparedStatement or GetFlightInfo until
-        DoGet takes it or DoPut rebinds the handle. DoGet takes it because
-        a frame keeps its optimized plan: a reused one would repeat now()
-        and the other per-statement values, which DuckDB evaluates per
+    def _frame(self, ticket: bytes, take: bool, sql: str | None = None,
+               handle: bytes | None = None) -> DataFrame:
+        """The frame of query text, or of an open prepared handle under its
+        current binding, resolved once per execution: a schema probe holds
+        it under the ticket bytes until DoGet takes it. A held frame counts
+        only while its row is the handle's current row object (None for
+        query text). DoGet takes it because a frame keeps its optimized
+        plan: a reused one would repeat now(), which DuckDB evaluates per
         execution."""
+        params = None
         with self._prepared_lock:
-            statement = self._prepared.get(handle)
-            if statement is None:
-                raise flight.FlightServerError(
-                    f"unknown prepared statement handle {handle!r}"
-                )
-            sql, params, frame = statement
-            if take:
-                statement[2] = None
-        if frame is not None:
-            return frame
+            if handle is not None:
+                statement = self._prepared.get(handle)
+                if statement is None:
+                    raise flight.FlightServerError(
+                        f"unknown prepared statement handle {handle!r}"
+                    )
+                sql, params = statement
+            held = self._held.pop(ticket, None) if take else self._held.get(ticket)
+        if held is not None and held[1] is params:
+            return held[0]
         if params is not None:
             try:
                 sql = dialect.bind_parameters(sql, params)
             except ValueError as exc:
                 raise flight.FlightServerError(str(exc)) from exc
         frame = resolve_query_frame(self.spark, sql)
-        with self._prepared_lock:
-            if not take and statement[1] is params:  # not rebound meanwhile
-                statement[2] = frame
+        if not take:
+            with self._prepared_lock:
+                self._hold(ticket, frame, params)
         return frame
+
+    def _hold(self, ticket: bytes, frame: DataFrame, params: list | None) -> None:
+        """Hold ``frame`` for the ticket's DoGet, evicting the oldest past
+        the cap. The caller holds ``_prepared_lock``."""
+        self._held[ticket] = (frame, params)
+        self._held.move_to_end(ticket)
+        while len(self._held) > MAX_PREPARED_STATEMENTS:
+            self._held.popitem(last=False)
 
     def _schema(self, command: DataFrame | pa.Table) -> pa.Schema:
         """The result schema: a metadata table's own, or the resolved
@@ -423,15 +440,21 @@ class SparkFlightServer(flight.FlightServerBase):
                 # time (the contract ADBC relies on), and the dataset
                 # schema rides back in the result so clients can bind
                 # without a round trip. Full dialect surface — DESCRIBE /
-                # SUMMARIZE / read_parquet prepare fine. The handle keeps
-                # the frame for its GetFlightInfo and DoGet.
+                # SUMMARIZE / read_parquet prepare fine. The frame is
+                # held under the handle's ticket for its DoGet.
                 frame = resolve_query_frame(self.spark, sql)
                 schema = _arrow_schema(frame)
             with self._prepared_lock:
                 handle = b"dss-ps-%d" % next(self._handles)
-                self._prepared[handle] = [sql, None, frame]
+                self._prepared[handle] = [sql, None]
                 while len(self._prepared) > MAX_PREPARED_STATEMENTS:
                     self._prepared.popitem(last=False)
+                if frame is not None:
+                    self._hold(
+                        flightsql.encode_command_prepared_statement_query(handle),
+                        frame,
+                        None,
+                    )
             yield flight.Result(
                 flightsql.encode_action_create_prepared_result(
                     handle, flightsql.serialize_schema(schema)
@@ -471,7 +494,7 @@ class SparkFlightServer(flight.FlightServerBase):
                 raise flight.FlightServerError(
                     f"unknown prepared statement handle {handle!r}"
                 )
-            statement[1:] = [row, None]
+            statement[1] = row
 
     def list_actions(self, context):
         return [
@@ -617,6 +640,8 @@ def main(argv: list[str] | None = None) -> None:
     """
     import argparse
 
+    from pyspark.logger import PySparkLogger
+
     from duckdb_server_spark import session
 
     parser = argparse.ArgumentParser(description="PySpark Arrow Flight SQL server")
@@ -625,6 +650,10 @@ def main(argv: list[str] | None = None) -> None:
     parser.add_argument("--port", type=int, default=32010)
     args = parser.parse_args(argv)
 
+    # Spark logs each captured analysis error with its stack trace, also
+    # the ones dialect.run_sql expects and retries; a client reads the
+    # root cause from _flight_error.
+    PySparkLogger.getLogger("SQLQueryContextLogger").disabled = True
     spark = session.get_spark(app_name="dss-server", configs=SERVING_CONFIGS)
     statements = [s.strip() for s in args.init.split(";") if s.strip()]
     # The same session path as Engine: function surface, views, init SQL.

@@ -48,6 +48,33 @@ def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+# Correctness confs, set by default_configs and again by tune_session on an
+# externally built session: the oracle comparison depends on each.
+_CORRECTNESS_CONFIGS = {
+    # Test corpus timestamps are naive wall-clock (FIXTURES.md).
+    "spark.sql.session.timeZone": "UTC",
+    # DuckDB errors on overflow / bad casts; Spark matches only under
+    # ANSI mode (SURVEY.md §7 phase 3). Known divergence: DuckDB 1.0
+    # yields NULL for division by zero while ANSI Spark raises —
+    # declared queries guard denominators (tests/test_semantics.py).
+    "spark.sql.ansi.enabled": "true",
+    # round-14 hunt G: Spark 4.1 gates the TIME type off by default
+    # (literals parse, but CAST/to_time/make_time raise
+    # UNSUPPORTED_TIME_TYPE) — DuckDB's TIME casts need it live
+    "spark.sql.timeType.enabled": "true",
+    # events.ts is parquet TIMESTAMP(NANOS) (FIXTURES.md), which Spark
+    # rejects by default; read as int64 ns and normalize in load_table.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Plain µs/ms parquet timestamps with isAdjustedToUTC=false would
+    # otherwise read as TIMESTAMP_NTZ, which withWatermark rejects
+    # (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE). The corpus timestamps are
+    # naive wall-clock; under the pinned UTC session TZ, reading them as
+    # TIMESTAMP_LTZ is value-identical and keeps every parquet flavor
+    # (ns-as-long, µs, ms) on one timestamp type.
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
+
+
 def default_configs(shuffle_partitions: int | None = None) -> dict[str, str]:
     """Engine configs. ``SET``-style engine config is the analog of the
     reference's `SET secret_directory/extension_directory` (k8s/main.yaml:107-108).
@@ -60,8 +87,7 @@ def default_configs(shuffle_partitions: int | None = None) -> dict[str, str]:
         "spark.dss.tuned": "true",
         # Result model parity: Arrow end-to-end (main.go:235-243).
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # Test corpus timestamps are naive wall-clock (FIXTURES.md).
-        "spark.sql.session.timeZone": "UTC",
+        **_CORRECTNESS_CONFIGS,
         # Runtime re-planning: partition coalescing, skew-join splitting,
         # broadcast-join conversion — required posture for the 100 TB target.
         "spark.sql.adaptive.enabled": "true",
@@ -69,25 +95,6 @@ def default_configs(shuffle_partitions: int | None = None) -> dict[str, str]:
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.cbo.enabled": "true",
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
-        # DuckDB errors on overflow / bad casts; Spark matches only under
-        # ANSI mode (SURVEY.md §7 phase 3). Known divergence: DuckDB 1.0
-        # yields NULL for division by zero while ANSI Spark raises —
-        # declared queries guard denominators (tests/test_semantics.py).
-        "spark.sql.ansi.enabled": "true",
-        # round-14 hunt G: Spark 4.1 gates the TIME type off by default
-        # (literals parse, but CAST/to_time/make_time raise) — DuckDB's
-        # TIME casts need it live
-        "spark.sql.timeType.enabled": "true",
-        # events.ts is parquet TIMESTAMP(NANOS) (FIXTURES.md), which Spark
-        # rejects by default; read as int64 ns and normalize in load_table.
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        # Plain µs/ms parquet timestamps with isAdjustedToUTC=false would
-        # otherwise read as TIMESTAMP_NTZ, which withWatermark rejects
-        # (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE). The corpus timestamps are
-        # naive wall-clock; under the pinned UTC session TZ, reading them as
-        # TIMESTAMP_LTZ is value-identical and keeps every parquet flavor
-        # (ns-as-long, µs, ms) on one timestamp type.
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
         # Scan split size for Engine and the operator catalog. The test
         # corpus is ~10 MB/table, which at Spark's 128m default packs into
         # ≤3 tasks — 3 of 32 cores busy. 512k splits the same files into
@@ -175,14 +182,8 @@ def tune_session(spark: SparkSession, sf_dir: str) -> None:
     if getattr(spark, "_dss_tuned_for", None) == sf_dir:
         return
     spark._dss_tuned_for = sf_dir
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    # round-14 hunt G: Spark 4.1 gates the TIME type off by default
-    # (literals parse, but CAST/to_time/make_time raise
-    # UNSUPPORTED_TIME_TYPE) — DuckDB's TIME casts need it live
-    spark.conf.set("spark.sql.timeType.enabled", "true")
+    for key, value in _CORRECTNESS_CONFIGS.items():
+        spark.conf.set(key, value)
     try:
         if spark.conf.get("spark.dss.tuned", "") == "true":
             return

@@ -39,8 +39,10 @@ def warehouse(sf_dir):
 
 
 @pytest.fixture(scope="module")
-def cli_port(tmp_path_factory, warehouse):
-    log = open(tmp_path_factory.mktemp("cli") / "server.log", "w")
+def cli_server(tmp_path_factory, warehouse):
+    """The running CLI server: (port, path of its stderr log)."""
+    log_path = tmp_path_factory.mktemp("cli") / "server.log"
+    log = open(log_path, "w")
     proc = subprocess.Popen(
         [sys.executable, "-m", "duckdb_server_spark.server",
          "--warehouse", warehouse, "--port", "0"],
@@ -67,11 +69,16 @@ def cli_port(tmp_path_factory, warehouse):
                 continue
             if m := re.match(r"serving .* port=(\d+)", line):
                 port = int(m.group(1))
-        yield port
+        yield port, log_path
     finally:
         os.killpg(proc.pid, signal.SIGKILL)
         proc.wait()
         log.close()
+
+
+@pytest.fixture(scope="module")
+def cli_port(cli_server):
+    return cli_server[0]
 
 
 @pytest.mark.parametrize(
@@ -195,3 +202,15 @@ def test_cli_server_errors_reach_stock_client(cli_port, sql, message):
     finally:
         client.close()
     assert "Traceback" not in str(err.value)
+
+
+def test_cli_server_log_holds_no_query_context_traceback(cli_server):
+    """Spark logs every captured analysis error with its stack trace, also
+    the ones the dialect expects and retries under another spelling; the
+    server silences that logger, and the client still reads the cause."""
+    port, log_path = cli_server
+    got = srv.query_flightsql(port, "SELECT c::INT[] AS v FROM (SELECT '[1,2]' AS c)")
+    assert got.to_pylist() == [{"v": [1, 2]}]
+    with pytest.raises(flight.FlightServerError, match="no_such_column"):
+        srv.query_flightsql(port, "SELECT no_such_column FROM lineitem")
+    assert "SQLQueryContextLogger" not in log_path.read_text()

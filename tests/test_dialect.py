@@ -730,11 +730,6 @@ def test_strftime_literal_runs_stay_words():
     assert "date_format(d, 'yyyy ''year''')" in out
 
 
-def test_pivot_statement_dataframe_is_cached(sql_session):
-    q = "PIVOT orders ON o_orderstatus USING count(*) GROUP BY o_orderpriority"
-    assert run_sql(sql_session, q) is run_sql(sql_session, q)
-
-
 def test_union_by_name_sees_shared_cte(sql_session):
     df = run_sql(
         sql_session,

@@ -14,10 +14,8 @@
    inconsistent branches. Operands now bind ONCE through a
    single-element transform(array(named_struct(…))) lambda.
 3. (low) ``SET duckdb_version_semantics='bogus'`` was accepted by the
-   generic SET handler and only raised at the next rewrite; flipping
-   the setting also left state.pivot_cache holding frames built under
-   the old semantics. Validation moved into the SET path and the
-   cache clears on change.
+   generic SET handler and only raised at the next rewrite.
+   Validation moved into the SET path.
 4. (low) the POSITIONAL JOIN derived-side LIMIT-0 schema probe ran
    raw DuckDB text through native spark.sql — DuckDB-only syntax the
    pipeline could lower (list literals, ::casts) hard-errored. The
@@ -185,22 +183,6 @@ class TestVersionSemanticsSet:
         # and the bad value was NOT retained
         st = dialect_state(sqls)
         assert st.settings.get("duckdb_version_semantics", "1.0") != "bogus"
-
-    def test_flip_clears_pivot_cache(self, sqls):
-        st = dialect_state(sqls)
-        with serving_dialect(True):
-            run_script(sqls, "SET duckdb_version_semantics='1.0'")
-            st.pivot_cache["__r16_sentinel__"] = object()
-            run_script(sqls, "SET duckdb_version_semantics='1.4'")
-            try:
-                assert "__r16_sentinel__" not in st.pivot_cache
-                # re-setting the SAME value must NOT clear
-                st.pivot_cache["__r16_keep__"] = object()
-                run_script(sqls, "SET duckdb_version_semantics='1.4'")
-                assert "__r16_keep__" in st.pivot_cache
-            finally:
-                st.pivot_cache.pop("__r16_keep__", None)
-                run_script(sqls, "SET duckdb_version_semantics='1.0'")
 
 
 class TestPositionalJoinDuckOnlyProbe:

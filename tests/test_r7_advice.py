@@ -14,7 +14,9 @@ Scenarios (ADVICE r6, dialect.py line refs as of round 5):
    instead of the catalog schema.
 4. ``_WINDOW_FILTER_RE`` failing on parenthesized aggregate arguments
    and mishandling DISTINCT.
-5. Unbounded server-lifetime caches (pivot_cache / __dd_read_* views).
+5. Unbounded server-lifetime caches (__dd_read_* views); a PIVOT
+   discovers its columns on every execution, so its answer follows the
+   data.
 """
 
 from __future__ import annotations
@@ -22,7 +24,6 @@ from __future__ import annotations
 import pytest
 
 from duckdb_server_spark.dialect import (
-    _PIVOT_CACHE_CAP,
     _TEMP_VIEW_CAP,
     dialect_state,
     execute_statement,
@@ -173,31 +174,32 @@ def test_plain_aggregate_filter_untouched():
 # --- 5. server-lifetime caches stay bounded --------------------------------
 
 
-def test_pivot_cache_is_lru_bounded(sql_session):
-    state = dialect_state(sql_session)
-    state.pivot_cache.clear()
-    for i in range(_PIVOT_CACHE_CAP + 8):
-        execute_statement(
-            sql_session,
-            f"PIVOT (SELECT n_regionkey, n_nationkey + {i} AS k FROM nation) "
-            f"ON n_regionkey USING sum(k)",
-        )
-    assert len(state.pivot_cache) <= _PIVOT_CACHE_CAP
+def test_pivot_cache_invalidated_on_write(sql_session):
+    """A PIVOT's answer follows its source: after a write route (CREATE
+    TABLE, INSERT) and after the view is replaced behind the dialect's
+    back (what Engine.create_table does), the same statement shows the
+    new pivot columns and values, as DuckDB does."""
 
+    def pivot(table):
+        return [r.asDict() for r in run_sql(
+            sql_session, f"PIVOT {table} ON k USING sum(v)"
+        ).collect()]
 
-def test_pivot_cache_invalidated_on_write(sql_session, tmp_path):
-    state = dialect_state(sql_session)
-    execute_statement(
-        sql_session,
-        "PIVOT (SELECT n_regionkey, n_nationkey AS k FROM nation) "
-        "ON n_regionkey USING sum(k)",
-    )
-    assert len(state.pivot_cache) > 0
-    execute_statement(
-        sql_session, "CREATE TABLE __adv_w AS SELECT 1 AS x"
-    )
-    assert len(state.pivot_cache) == 0
+    execute_statement(sql_session, "CREATE TABLE __adv_w AS SELECT 'a' AS k, 1 AS v")
+    assert pivot("__adv_w") == [{"a": 1}]
+    execute_statement(sql_session, "INSERT INTO __adv_w VALUES ('b', 2)")
+    assert pivot("__adv_w") == [{"a": 1, "b": 2}]
     execute_statement(sql_session, "DROP TABLE __adv_w")
+
+    sql_session.createDataFrame(
+        [("a", 1), ("b", 2)], "k STRING, v INT"
+    ).createOrReplaceTempView("__adv_p")
+    assert pivot("__adv_p") == [{"a": 1, "b": 2}]
+    sql_session.createDataFrame(
+        [("a", 10), ("c", 30)], "k STRING, v INT"
+    ).createOrReplaceTempView("__adv_p")
+    assert pivot("__adv_p") == [{"a": 10, "c": 30}]
+    sql_session.catalog.dropTempView("__adv_p")
 
 
 def test_file_read_views_are_bounded(sql_session):

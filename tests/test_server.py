@@ -279,11 +279,9 @@ def _execute(client, descriptor):
     return client.do_get(info.endpoints[0].ticket).read_all()
 
 
-def test_prepared_handle_resolves_once_per_execution(flight_port, monkeypatch):
-    """A prepared handle holds the frame it resolved (at prepare time, or
-    at GetFlightInfo after a DoPut) for the DoGet that follows, so each
-    execution resolves once; a statement query's ticket is the statement
-    itself and resolves on each leg."""
+@pytest.fixture
+def calls(monkeypatch):
+    """The SQL of every ``resolve_query_frame`` call the server makes."""
     calls = []
     resolve = srv.resolve_query_frame
 
@@ -292,6 +290,14 @@ def test_prepared_handle_resolves_once_per_execution(flight_port, monkeypatch):
         return resolve(spark, sql)
 
     monkeypatch.setattr(srv, "resolve_query_frame", counting_resolve)
+    return calls
+
+
+def test_prepared_handle_resolves_once_per_execution(flight_port, calls):
+    """A frame resolved at prepare time or by a schema probe is held for
+    the DoGet that follows, so each execution resolves once, for a
+    prepared handle (bound by DoPut or not) as for a statement query or a
+    raw-SQL descriptor."""
 
     def resolves(run):
         calls.clear()
@@ -300,7 +306,8 @@ def test_prepared_handle_resolves_once_per_execution(flight_port, monkeypatch):
 
     assert resolves(lambda: srv.query_prepared(flight_port, "SELECT 1 AS a")) == 1
     assert resolves(lambda: srv.query_prepared(flight_port, "SELECT ? AS a", [7])) == 1
-    assert resolves(lambda: srv.query_flightsql(flight_port, "SELECT 1 AS a")) == 2
+    assert resolves(lambda: srv.query_flightsql(flight_port, "SELECT 1 AS a")) == 1
+    assert resolves(lambda: srv.query_two_step(flight_port, "SELECT 1 AS a")) == 1
 
     with flight.connect(f"grpc://127.0.0.1:{flight_port}") as client:
         descriptor = _prepare(client, "SELECT ? AS v")
@@ -316,6 +323,48 @@ def test_prepared_handle_resolves_once_per_execution(flight_port, monkeypatch):
         descriptor = _prepare(client, "SELECT now() AS t")
         first, second = (_execute(client, descriptor)["t"][0] for _ in range(2))
         assert first != second and len(calls) == 2
+
+
+def test_statement_query_resolves_once_per_request(flight_port, calls):
+    """GetSchema and GetFlightInfo of a CommandStatementQuery share one
+    held frame, which DoGet takes; a second DoGet of the same ticket
+    resolves afresh, so now() moves between executions, as in DuckDB."""
+    descriptor = flight.FlightDescriptor.for_command(
+        flightsql.encode_command_statement_query("SELECT 41 + 1 AS v")
+    )
+    with flight.connect(f"grpc://127.0.0.1:{flight_port}") as client:
+        calls.clear()
+        assert client.get_schema(descriptor).schema.names == ["v"]
+        ticket = client.get_flight_info(descriptor).endpoints[0].ticket
+        assert client.do_get(ticket).read_all()["v"].to_pylist() == [42]
+        assert len(calls) == 1
+        assert client.do_get(ticket).read_all()["v"].to_pylist() == [42]
+        assert len(calls) == 2
+        ticket = flight.Ticket(flightsql.encode_command_statement_query("SELECT now() AS t"))
+        first, second = (client.do_get(ticket).read_all()["t"][0] for _ in range(2))
+        assert first != second
+
+
+def test_held_frames_capped(spark, monkeypatch):
+    """Frames held by schema probes whose DoGet never comes are evicted
+    oldest first; an evicted ticket still answers, resolving afresh."""
+    cap = 16
+    monkeypatch.setattr(srv, "MAX_PREPARED_STATEMENTS", cap)
+    server, _thread = srv.serve_in_background(spark)
+    client = flight.connect(f"grpc://127.0.0.1:{server.port}")
+    try:
+        tickets = [
+            client.get_flight_info(flight.FlightDescriptor.for_command(
+                flightsql.encode_command_statement_query(f"SELECT {i} AS v")
+            )).endpoints[0].ticket
+            for i in range(cap + 10)
+        ]
+        assert len(server._held) <= cap
+        assert tickets[0].ticket not in server._held
+        assert client.do_get(tickets[0]).read_all()["v"].to_pylist() == [0]
+    finally:
+        client.close()
+        server.shutdown()
 
 
 def test_prepared_rebind_never_keeps_a_stale_frame(flight_port):
@@ -1026,12 +1075,12 @@ def test_execute_of_init_prepared_dml_is_gated(spark, flight_port):
 
 def test_concurrent_mixed_dialect_clients_stress(spark, flight_port):
     """VERDICT r5 item 7: the server shares one SparkSession plus mutable
-    serving state (dynamic-PIVOT digest cache, prepared-statement
-    handles, file-read view LRU) across clients. N parallel clients run
-    a MIX of native-Spark SQL, DuckDB-dialect SQL, dynamic PIVOT (both
-    cache-hitting and cache-missing statements), and per-thread
-    prepared-statement parameter binding — every client must get its own
-    correct answer, with no cache or handle cross-talk."""
+    serving state (prepared-statement handles, held frames, file-read
+    view LRU) across clients. N parallel clients run a MIX of native-Spark
+    SQL, DuckDB-dialect SQL, dynamic PIVOT (repeated and distinct
+    statements), and per-thread prepared-statement parameter binding —
+    every client must get its own correct answer, with no cache or handle
+    cross-talk."""
     import concurrent.futures
 
     def one(i: int):
@@ -1054,8 +1103,8 @@ def test_concurrent_mixed_dialect_clients_stress(spark, flight_port):
             )
             return ("dialect", i, t["v"][0].as_py(), (i % 4 + 1) * 10)
         if kind == 2:
-            # dynamic PIVOT: two distinct statements alternate, so the
-            # digest cache serves hits and misses concurrently
+            # dynamic PIVOT: two distinct statements alternate, each
+            # discovering its pivot columns on every request
             agg = "sum(l_quantity)" if i % 2 else "count(l_orderkey)"
             t = srv.query_raw(
                 flight_port,
@@ -1081,16 +1130,12 @@ def test_concurrent_mixed_dialect_clients_stress(spark, flight_port):
             assert want, (kind, i)
         else:
             assert got == want, (kind, i, got)
-    # serving state stayed bounded and coherent
-    from duckdb_server_spark.dialect import _PIVOT_CACHE_CAP, dialect_state
-
-    assert len(dialect_state(spark).pivot_cache) <= _PIVOT_CACHE_CAP
 
 
 def test_sustained_concurrency_soak_10x(spark, flight_port, sf_dir):
     """VERDICT r7 task 7: minutes-scale soak of the r6 mixed-dialect
     stress at the 10x data tier. 8 workers sustain a request mix (native
-    SQL, dialect SQL, dynamic PIVOT hit/miss, prepared statements, and
+    SQL, dialect SQL, dynamic PIVOT, prepared statements, and
     cache-churning file reads with distinct option sets) against a view
     10x the base lineitem; afterwards every serving-state LRU must sit
     at/below its cap, driver-side RSS growth between the warmup
@@ -1103,11 +1148,7 @@ def test_sustained_concurrency_soak_10x(spark, flight_port, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from duckdb_server_spark.dialect import (
-        _PIVOT_CACHE_CAP,
-        _TEMP_VIEW_CAP,
-        dialect_state,
-    )
+    from duckdb_server_spark.dialect import _TEMP_VIEW_CAP, dialect_state
 
     # 10x tier: union of 10 key-offset replicas (consistent join keys)
     base = spark.table("lineitem")
@@ -1176,8 +1217,6 @@ def test_sustained_concurrency_soak_10x(spark, flight_port, sf_dir):
     with concurrent.futures.ThreadPoolExecutor(max_workers=8) as pool:
         warm = list(pool.map(one, range(40)))
         rss_warm = rss_kb()
-        state_mid = dialect_state(spark)
-        assert len(state_mid.pivot_cache) <= _PIVOT_CACHE_CAP
         # cross-session isolation probed mid-soak, while state is hot
         other = spark.newSession()
         from duckdb_server_spark.dialect import execute_statement
@@ -1200,7 +1239,6 @@ def test_sustained_concurrency_soak_10x(spark, flight_port, sf_dir):
         else:
             assert want, (kind, i)
     state = dialect_state(spark)
-    assert len(state.pivot_cache) <= _PIVOT_CACHE_CAP
     assert len(state.temp_views) <= _TEMP_VIEW_CAP
     # sustained-load memory: allow transient JVM heap elasticity (the
     # JVM grows its committed heap under load and returns it lazily) but
