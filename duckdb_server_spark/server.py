@@ -37,7 +37,11 @@ Spark-first differences (improvements, documented in SURVEY.md §3):
 - The warehouse is served from memory (``main``), as the reference's one
   DuckDB keeps the pages it has read in its buffer manager (main.go:44-70).
   Scans use Spark's default 128 MB splits (``SERVING_CONFIGS``), one task
-  per core for a small file, not the operator catalog's 512 KB. Each
+  per core for a small file, not the operator catalog's 512 KB. Serving
+  runs without whole-stage codegen, since a fused stage class embeds each
+  request's literals and so cost a Janino compile plus a HotSpot recompile
+  per request; each operator then runs its own loop over small
+  per-expression classes. Each
   warehouse view is persisted in Spark's in-memory columnar store
   (``session.cache_views``, MEMORY_ONLY): tables are admitted smallest
   first while 4 × their parquet bytes fit in half of the driver's on-heap
@@ -86,8 +90,14 @@ MAX_PREPARED_STATEMENTS = 1024
 
 # The serving session scans with Spark's default 128 MB splits rather than
 # the operator catalog's 512 KB (session.default_configs): a lookup's job
-# then has one task per core, not one per 512 KB of parquet.
-SERVING_CONFIGS = {"spark.sql.files.maxPartitionBytes": str(128 << 20)}
+# then has one task per core, not one per 512 KB of parquet. It also runs
+# without whole-stage codegen: a fused stage class embeds the request's
+# literals, so every fresh key or range cost a Janino compile plus a
+# HotSpot recompile of the new class's loop.
+SERVING_CONFIGS = {
+    "spark.sql.files.maxPartitionBytes": str(128 << 20),
+    "spark.sql.codegen.wholeStage": "false",
+}
 
 # Read-only command prefixes allowed through the statement gate.
 _READONLY_COMMAND_PREFIXES = ("Explain", "Show", "Describe")
@@ -467,6 +477,9 @@ class SparkFlightServer(flight.FlightServerBase):
             )
             with self._prepared_lock:
                 self._prepared.pop(handle, None)  # close is idempotent
+                self._held.pop(
+                    flightsql.encode_command_prepared_statement_query(handle), None
+                )
             return
         raise NotImplementedError(f"action {action.type!r} not implemented")
 

@@ -154,11 +154,15 @@ def test_cli_server_rounds_doubles_like_duckdb(cli_port, warehouse):
 def test_cli_server_serves_warehouse_from_memory(cli_port):
     # Every view is persisted in memory: the first query on lineitem
     # builds its cache, and a lookup's plan scans it, not the parquet file.
+    # Serving runs without whole-stage codegen, so the plan has no fused
+    # stage whose class would embed the lookup's key: no "*(n)" operator
+    # (simple EXPLAIN), no "* Op" or "[codegen id : n]" (formatted).
     srv.query_flightsql(cli_port, "SELECT count(*) AS n FROM lineitem")
     plan = srv.query_flightsql(
         cli_port, "EXPLAIN SELECT * FROM lineitem WHERE l_orderkey = 1"
     ).column("explain_value")[0].as_py()
     assert "InMemoryTableScan" in plan
+    assert not re.search(r"WholeStageCodegen|\*\(\d|\* \w|codegen id", plan)
 
 
 def test_cache_views_admits_smallest_tables_within_budget(warehouse):

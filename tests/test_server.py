@@ -367,6 +367,30 @@ def test_held_frames_capped(spark, monkeypatch):
         server.shutdown()
 
 
+def test_close_releases_held_frame(spark):
+    """ClosePreparedStatement drops the frame held for the handle's DoGet
+    along with the handle, so a statement prepared and closed without a
+    DoGet pins no resolved frame; its ticket then fails."""
+    server, _thread = srv.serve_in_background(spark)
+    client = flight.connect(f"grpc://127.0.0.1:{server.port}")
+    try:
+        ticket = _prepare(client, "SELECT 1 AS v").command
+        assert ticket in server._held
+        handle = flightsql.decode_prepared_statement_handle(
+            flightsql.unpack_any(ticket)[1]
+        )
+        list(client.do_action(flight.Action(
+            flightsql.CLOSE_PREPARED_STATEMENT,
+            flightsql.encode_action_close_prepared_request(handle),
+        )))
+        assert ticket not in server._held
+        with pytest.raises(flight.FlightServerError, match="unknown prepared statement handle"):
+            client.do_get(flight.Ticket(ticket)).read_all()
+    finally:
+        client.close()
+        server.shutdown()
+
+
 def test_prepared_rebind_never_keeps_a_stale_frame(flight_port):
     """Readers execute one handle while a writer rebinds it: a frame
     resolved under a binding that DoPut replaced meanwhile is not kept,
@@ -1141,10 +1165,10 @@ def test_sustained_concurrency_soak_10x(spark, flight_port, sf_dir):
     at/below its cap, driver-side RSS growth between the warmup
     checkpoint and the end must stay bounded, and a second Spark session
     created mid-soak must see none of the soak session's dialect state
-    (no cross-session bleed)."""
+    (no cross-session bleed). All 900 requests run, and every result is
+    checked; there is no time cut-off."""
     import concurrent.futures
     import os
-    import time
 
     from pyspark.sql import functions as F
 
@@ -1213,7 +1237,6 @@ def test_sustained_concurrency_soak_10x(spark, flight_port, sf_dir):
         return ("fileread", i, t["n"][0].as_py(), t["n"][0].as_py() > 0)
 
     N = 900
-    deadline = time.monotonic() + 240  # hard wall: soak, not hang
     with concurrent.futures.ThreadPoolExecutor(max_workers=8) as pool:
         warm = list(pool.map(one, range(40)))
         rss_warm = rss_kb()
@@ -1224,11 +1247,7 @@ def test_sustained_concurrency_soak_10x(spark, flight_port, sf_dir):
         execute_statement(other, "SET memory_limit='123MB'")
         assert dialect_state(other) is not dialect_state(spark)
         assert dialect_state(spark).settings.get("memory_limit") != "123MB"
-        results = warm + [
-            r
-            for r in pool.map(one, range(40, N))
-            if time.monotonic() < deadline or r
-        ]
+        results = warm + list(pool.map(one, range(40, N)))
     rss_end = rss_kb()
 
     for kind, i, got, want in results:
